@@ -150,3 +150,75 @@ def test_delete_keys_rejects_ambiguous_multi_column_frame(spark, tmp_path):
     # a multi-column frame CONTAINING the key column selects by name
     good = spark.createDataFrame([("a", "x")], "id string, noise string")
     assert t.delete_keys(good) == 1
+
+
+def test_upsert_latest_is_one_pass(spark, tmp_path):
+    """The affected count is an observed metric of the publish write: an
+    upsert onto an existing table runs the merge once (at most 3 jobs) and
+    pins no blocks, where a checkpoint-then-rejoin count ran 7 jobs and
+    left one checkpoint pinned per call."""
+    t = ParquetTable(spark, str(tmp_path / "latest"))
+    t.upsert_latest(_rec(spark, [(f"k{i}", T1, "p", f"h{i}") for i in range(50)]))
+    batch = _rec(spark, [("k1", T2, "q", "hq"), ("new", T2, "q", "hn")])
+    sc = spark.sparkContext
+    pinned = len(sc._jsc.getPersistentRDDs())
+    sc.setJobGroup("upsert-one-pass", "upsert_latest job count")
+    try:
+        assert t.upsert_latest(batch) == 2
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("upsert-one-pass")) <= 3
+    assert len(sc._jsc.getPersistentRDDs()) == pinned
+
+
+@pytest.mark.parametrize("hook", ["read", "_version_path"])
+def test_concurrent_loser_whose_snapshot_was_pruned_retries(spark, tmp_path, hook):
+    """Deterministic form of the retry-loop race: the winner publishes AND
+    prunes (keep_versions=1) the version the loser is merging — right after
+    the loser's ``read()`` returned (the merge's write then scans deleted
+    files) or right after it resolved the snapshot's path (the read itself
+    then lists a deleted dir). The loser must get the retryable
+    ConcurrentPublishError — not a file-not-found from the pruned
+    snapshot — and its retry must land on top of the winner."""
+    from wms_data_pipeline_spark.operators.merge import ConcurrentPublishError
+
+    root = str(tmp_path / "race")
+    winner = ParquetTable(spark, root, concurrent_writers=True)
+    winner.upsert_latest(_rec(spark, [("seed", T1, "base", "h0")]))
+    loser = ParquetTable(spark, root, concurrent_writers=True)
+    real = getattr(loser, hook)
+
+    def then_lose(*args, **kwargs):
+        out = real(*args, **kwargs)
+        winner.upsert_latest(_rec(spark, [("w", T2, "winner", "hw")]))
+        return out
+
+    setattr(loser, hook, then_lose)
+    with pytest.raises(ConcurrentPublishError):
+        loser.upsert_latest(_rec(spark, [("l", T2, "loser", "hl")]))
+    delattr(loser, hook)
+    assert loser.upsert_latest(_rec(spark, [("l", T2, "loser", "hl")])) == 1
+    got = {r["id"]: r["payload"] for r in loser.read().collect()}
+    assert got == {"seed": "base", "w": "winner", "l": "loser"}
+    assert loser.current_version() == 3
+
+
+def test_concurrent_write_failing_on_pruned_snapshot_is_a_lost_race(spark, tmp_path):
+    """A data write that fails because a newer commit's retention prune
+    deleted the snapshot it scans is the lost race, reported as
+    ConcurrentPublishError with the loser's partial dir removed."""
+    from wms_data_pipeline_spark import fsio
+    from wms_data_pipeline_spark.operators.merge import ConcurrentPublishError
+
+    root = str(tmp_path / "race")
+    t = ParquetTable(spark, root, concurrent_writers=True)
+    t.upsert_latest(_rec(spark, [("a", T1, "v1", "h1")]))
+    stale = latest_merge(t.read(), _rec(spark, [("b", T1, "mine", "hb")]))
+    ParquetTable(spark, root, concurrent_writers=True).upsert_latest(
+        _rec(spark, [("a", T2, "v2", "h2")])
+    )  # commits version 2 and prunes version 1
+    with pytest.raises(ConcurrentPublishError):
+        t._publish_concurrent(stale, 2)
+    data_dirs = [n for n in fsio.TableFS(spark, root).list_names(root) if n.startswith("v=")]
+    assert data_dirs == [t._marker_dir(2)]
+    assert t.read().collect()[0]["payload"] == "v2"

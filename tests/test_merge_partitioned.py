@@ -1,9 +1,13 @@
-"""Bucket-partitioned merge table: same invariants as ParquetTable, plus
-the pruning property — a merge only touches the batch's buckets."""
+"""Bucket-partitioned merge table: the merge contract it shares with
+ParquetTable (one test over both sinks), plus the pruning property — a
+merge only touches the batch's buckets."""
 
 import os
 from datetime import datetime
 
+import pytest
+
+from wms_data_pipeline_spark.operators.merge import ParquetTable
 from wms_data_pipeline_spark.operators.merge_partitioned import PartitionedMergeTable
 
 T1, T2 = datetime(2026, 1, 1, 10), datetime(2026, 1, 1, 11)
@@ -27,23 +31,40 @@ def _bucket_versions(root):
     return out
 
 
-def test_latest_invariants(spark, tmp_path):
-    t = PartitionedMergeTable(spark, str(tmp_path / "latest"), n_buckets=8)
-    assert t.upsert_latest(_rec(spark, [("a", T2, "new", "h2"), ("b", T1, "pb", "h1")])) == 2
-    # stale + equal rejected, newer wins — same contract as ParquetTable
+def _read(t):
+    return t.read() if isinstance(t, ParquetTable) else t.read_all()
+
+
+@pytest.mark.parametrize("sink", [ParquetTable, PartitionedMergeTable])
+def test_sink_contract(spark, tmp_path, sink):
+    """The merge contract both parquet sinks share: newer wins, stale and
+    equal timestamps are rejected and count 0, a replay counts 0 (also for
+    a NULL ``updated_at`` on both sides — the stored row does not change),
+    and a history rerun is a no-op."""
+
+    def table(name):
+        if sink is ParquetTable:
+            return ParquetTable(spark, str(tmp_path / name))
+        return PartitionedMergeTable(spark, str(tmp_path / name), n_buckets=8)
+
+    t = table("latest")
+    first = _rec(spark, [("a", T2, "new", "h2"), ("b", T1, "pb", "h1")])
+    assert t.upsert_latest(first) == 2
+    assert t.upsert_latest(first) == 0  # equal-timestamp replay
     assert t.upsert_latest(_rec(spark, [("a", T1, "old", "h1")])) == 0
     assert t.upsert_latest(_rec(spark, [("a", T2, "equal", "h3")])) == 0
     assert t.upsert_latest(_rec(spark, [("a", datetime(2026, 1, 2), "newest", "h4")])) == 1
-    state = {r["id"]: r["payload"] for r in t.read_all().collect()}
-    assert state == {"a": "newest", "b": "pb"}
+    assert {r["id"]: r["payload"] for r in _read(t).collect()} == {"a": "newest", "b": "pb"}
 
+    assert t.upsert_latest(_rec(spark, [("n", None, "stored", "h5")])) == 1
+    assert t.upsert_latest(_rec(spark, [("n", None, "incoming", "h6")])) == 0
+    assert {r["id"]: r["payload"] for r in _read(t).collect()}["n"] == "stored"
 
-def test_history_rerun_noop(spark, tmp_path):
-    t = PartitionedMergeTable(spark, str(tmp_path / "hist"), n_buckets=8)
+    h = table("hist")
     batch = _rec(spark, [("a", T1, "p", "h1"), ("b", T1, "p", "h2")])
-    assert t.append_history(batch) == 2
-    assert t.append_history(batch) == 0
-    assert t.read_all().count() == 2
+    assert h.append_history(batch) == 2
+    assert h.append_history(batch) == 0
+    assert _read(h).count() == 2
 
 
 def test_merge_prunes_untouched_buckets(spark, tmp_path):
@@ -71,7 +92,7 @@ def test_delete_keys_prunes_buckets(spark, tmp_path):
     t = PartitionedMergeTable(spark, str(tmp_path / "pt"), n_buckets=8)
     rows = [(f"k{i}", T1, f"p{i}", f"h{i}") for i in range(40)]
     t.upsert_latest(_rec(spark, rows))
-    versions_before = {b: t._current_version(b) for b in range(8)}
+    versions_before = {b: t.bucket(b).current_version() for b in range(8)}
 
     # delete two specific keys -> at most two buckets touched
     forget = spark.createDataFrame([("k3",), ("k17",)], "id string")
@@ -82,7 +103,7 @@ def test_delete_keys_prunes_buckets(spark, tmp_path):
     assert t.delete_keys(forget) == 2
     assert t.read_all().count() == 38
     for b in range(8):
-        moved = t._current_version(b) != versions_before[b]
+        moved = t.bucket(b).current_version() != versions_before[b]
         assert moved == (b in target_buckets and versions_before[b] is not None)
     # idempotent
     assert t.delete_keys(forget) == 0

@@ -9,6 +9,7 @@ import sys
 import threading
 import urllib.parse
 import urllib.request
+from contextlib import contextmanager
 from http.server import ThreadingHTTPServer
 from pathlib import Path
 
@@ -19,13 +20,21 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
 from mock_wms_api import Dataset, make_handler  # noqa: E402
 
 
-@pytest.fixture()
-def api():
-    ds = Dataset(120)
+@contextmanager
+def _serve(n_rows):
+    ds = Dataset(n_rows)
     srv = ThreadingHTTPServer(("127.0.0.1", 0), make_handler(ds))
     threading.Thread(target=srv.serve_forever, daemon=True).start()
-    yield f"http://127.0.0.1:{srv.server_address[1]}", ds
-    srv.shutdown()
+    try:
+        yield f"http://127.0.0.1:{srv.server_address[1]}", ds
+    finally:
+        srv.shutdown()
+
+
+@pytest.fixture()
+def api():
+    with _serve(120) as served:
+        yield served
 
 
 def _get(base, path):
@@ -55,25 +64,31 @@ def test_envelope_pagination_and_stable_order(api):
     assert isinstance(row["warehouse_id"], int)
 
 
-def test_updated_after_is_strict_and_advance_is_deterministic(api):
-    base, _ds = api
-    wm = max(r["updated_at"] for r in _get(base, "/ob/orders?limit=500")["data"])
-    # strict >: the watermark row itself must not reappear
-    assert _get(
-        base, "/ob/orders?limit=500&updated_after=" + urllib.parse.quote(wm)
-    )["data"] == []
-    adv = _advance(base)
-    assert adv == {"step": 1, "touched": 24}  # 12 rows/entity at 120 rows
-    inc = _get(
-        base, "/ob/orders?limit=500&updated_after=" + urllib.parse.quote(wm)
-    )["data"]
-    assert len(inc) == 12
-    assert {r["status"] for r in inc} == {"READYTOPICK"}
-    # deterministic: a second Dataset advanced once is identical
-    ds2 = Dataset(120)
-    ds2.advance()
-    rows2, _ = ds2.page("ob_orders", 500, 0, wm)
-    assert [r["id"] for r in rows2] == [r["id"] for r in inc]
+def test_updated_after_is_strict_and_advance_is_deterministic():
+    # 3,000 rows span more than a day of initial timestamps: an advance
+    # must still stamp past all of them, or the slice falls below the
+    # watermark and no incremental reader ever sees it
+    for n_rows in (120, 3000):
+        with _serve(n_rows) as (base, _ds):
+            orders = _get(base, f"/ob/orders?limit={n_rows}")["data"]
+            wm = max(r["updated_at"] for r in orders)
+            # strict >: the watermark row itself must not reappear
+            assert _get(
+                base, "/ob/orders?limit=500&updated_after=" + urllib.parse.quote(wm)
+            )["data"] == []
+            adv = _advance(base)
+            # a tenth of each entity's rows: 12 per entity at 120 rows
+            assert adv == {"step": 1, "touched": n_rows // 5}
+            inc = _get(
+                base, f"/ob/orders?limit={n_rows}&updated_after=" + urllib.parse.quote(wm)
+            )["data"]
+            assert len(inc) == n_rows // 10
+            assert {r["status"] for r in inc} == {"READYTOPICK"}
+            # deterministic: a second Dataset advanced once is identical
+            ds2 = Dataset(n_rows)
+            ds2.advance()
+            rows2, _ = ds2.page("ob_orders", n_rows, 0, wm)
+            assert [r["id"] for r in rows2] == [r["id"] for r in inc]
 
 
 def test_extractor_round_trip_over_live_http(api, spark, tmp_path):

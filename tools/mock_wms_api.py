@@ -144,17 +144,22 @@ class Dataset:
 
     def advance(self) -> dict:
         """One CDC step: rows whose index ≡ step (mod 10) advance one
-        status (terminal states stay), updated_at moves past the current
-        max — so an `updated_after` reader sees exactly this slice."""
+        status (terminal states stay), updated_at moves one minute past the
+        current max of either table — so an `updated_after` reader sees
+        exactly this slice, at any dataset size."""
         with self.lock:
             self.step += 1
             touched = 0
+            new_ts = _iso(max(
+                _parse_iso(row["updated_at"])
+                for rows in self.tables.values()
+                for row in rows
+            ) + timedelta(minutes=1))
             for entity, states in (
                 ("ib_receipts", RECEIPT_STATES),
                 ("ob_orders", ORDER_STATES),
             ):
                 rows = self.tables[entity]
-                new_ts = _iso(_EPOCH + timedelta(days=1, minutes=self.step))
                 for i, row in enumerate(rows):
                     if i % 10 != self.step % 10:
                         continue

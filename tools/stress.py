@@ -116,17 +116,17 @@ def partitioned_merge_stress(
         F.pmod(F.hash(F.col("id")), F.lit(n_buckets)) < 4
     ).limit(batch_rows).localCheckpoint(eager=False)
 
-    vers_before = {b: pt._current_version(b) for b in range(n_buckets)}
+    vers_before = {b: pt.bucket(b).current_version() for b in range(n_buckets)}
     t0 = time.perf_counter()
     affected = pt.upsert_latest(small)
     t_merge = time.perf_counter() - t0
-    vers_after = {b: pt._current_version(b) for b in range(n_buckets)}
+    vers_after = {b: pt.bucket(b).current_version() for b in range(n_buckets)}
     touched = [b for b in range(n_buckets) if vers_before[b] != vers_after[b]]
 
     t0 = time.perf_counter()
     n_del = pt.delete_keys(small.select("id").limit(2_000))
     t_del = time.perf_counter() - t0
-    vers_del = {b: pt._current_version(b) for b in range(n_buckets)}
+    vers_del = {b: pt.bucket(b).current_version() for b in range(n_buckets)}
     touched_del = [b for b in range(n_buckets) if vers_after[b] != vers_del[b]]
 
     # contrast: unpartitioned merge of the same batch rewrites the table

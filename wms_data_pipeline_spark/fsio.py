@@ -1,7 +1,9 @@
 """Scheme-aware control-plane file I/O via the Hadoop FileSystem API.
 
-``ParquetTable`` / ``PartitionedMergeTable`` keep their commit record in a
-tiny ``_VERSION`` pointer file next to the data. The DATA side
+``ParquetTable`` keeps its commit record in a tiny ``_VERSION`` pointer
+file next to the data — the one pointer protocol of every parquet sink
+(``PartitionedMergeTable`` is a ParquetTable per bucket directory, the
+control tables wrap one). The DATA side
 (``spark.read/write.parquet``) was always scheme-agnostic, but the pointer
 was driver-local ``open()``/``os.replace`` — meaning the warehouse root had
 to live on the driver's local disk. On a real cluster the control plane

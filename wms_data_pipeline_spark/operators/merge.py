@@ -14,10 +14,19 @@ Two layers here:
 1. Pure DataFrame transforms (``history_merge``/``latest_merge``) — the
    semantics, testable and composable (also used by streaming foreachBatch).
 2. ``ParquetTable`` — a minimal versioned-directory table giving atomic
-   publish + time-travel-free single-writer MERGE on plain parquet, keeping
-   the engine dependency-free. On a real lake this is a Delta/Iceberg MERGE
+   publish + MERGE on plain parquet, keeping the engine dependency-free.
+   It holds the ONE pointer protocol (``v=<n>/`` + ``_VERSION``, or commit
+   markers under ``concurrent_writers``), crash guards and retention of
+   every parquet sink: the control tables wrap it, and
+   ``merge_partitioned.PartitionedMergeTable`` is one ParquetTable per
+   bucket. On a real lake this is a Delta/Iceberg MERGE
    (``whenNotMatchedInsertAll`` / ``whenMatchedUpdateAll(condition=…)``)
    behind the same function signatures.
+
+Counts are metrics of the merge that runs, not extra queries (the
+Structured Streaming progress-metrics practice): ``upsert_latest`` counts
+the batch-side winners through an ``Observation`` on its publish write, so
+the merge runs once and the old snapshot is read once.
 
 Scale notes: both merges shuffle once on the business key. ``history_merge``
 uses a left-anti join (broadcast-able when the incoming batch is small
@@ -36,13 +45,19 @@ import time
 import uuid
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from wms_data_pipeline_spark import fsio
 
 HISTORY_KEY: tuple[str, ...] = ("id", "updated_at", "payload_hash")  # init_dw.sql:31-40
 LATEST_KEY: str = "id"  # init_dw.sql:42-50
+
+# ``ParquetTable._publish`` base for callers that do not track the version
+# their rows were built from (the single-writer control tables)
+_UNCHECKED = object()
 
 
 class CorruptTablePointerError(RuntimeError):
@@ -105,6 +120,32 @@ def history_merge(
     return inserted, existing.unionByName(inserted)
 
 
+def _latest_winners(
+    existing: DataFrame | None,
+    batch: DataFrame,
+    key: str = LATEST_KEY,
+    ts_col: str = "updated_at",
+    tiebreak_col: str | None = "payload_hash",
+) -> DataFrame:
+    """``latest_merge``'s output still carrying ``__is_existing`` — 1 where
+    the stored row survived, 0 where a batch row won — so a sink can count
+    affected rows off the very rows it writes."""
+    b = batch.withColumn("__is_existing", F.lit(0))
+    if existing is not None:
+        merged = existing.withColumn("__is_existing", F.lit(1)).unionByName(b)
+    else:
+        merged = b
+    order = [F.col(ts_col).desc(), F.col("__is_existing").desc()]
+    if tiebreak_col and tiebreak_col in batch.columns:
+        order.append(F.col(tiebreak_col).desc())
+    w = Window.partitionBy(key).orderBy(*order)
+    return (
+        merged.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+
+
 def latest_merge(
     existing: DataFrame | None,
     batch: DataFrame,
@@ -121,19 +162,8 @@ def latest_merge(
     desc), so the stored row survives ties. ``tiebreak_col`` makes intra-batch
     equal-timestamp conflicts deterministic.
     """
-    b = batch.withColumn("__is_existing", F.lit(0))
-    if existing is not None:
-        merged = existing.withColumn("__is_existing", F.lit(1)).unionByName(b)
-    else:
-        merged = b
-    order = [F.col(ts_col).desc(), F.col("__is_existing").desc()]
-    if tiebreak_col and tiebreak_col in batch.columns:
-        order.append(F.col(tiebreak_col).desc())
-    w = Window.partitionBy(key).orderBy(*order)
-    return (
-        merged.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__is_existing")
+    return _latest_winners(existing, batch, key, ts_col, tiebreak_col).drop(
+        "__is_existing"
     )
 
 
@@ -211,7 +241,11 @@ class ParquetTable:
     wins (kernel O_EXCL on file://, namenode-atomic create on hdfs:// —
     NOT safe on s3a, see ``fsio``); losers raise
     ``ConcurrentPublishError`` having exposed no state, and their dirs are
-    swept by retention. Reads are marker-aware regardless of the flag, so
+    swept by retention. A merge also loses when the version it read
+    (``_snapshot``) is no longer current, or when a newer commit's
+    retention prune deleted that snapshot under its read or write —
+    never with a raw file-not-found. Reads are marker-aware
+    regardless of the flag, so
     readers need no configuration; a legacy ``_VERSION`` table upgrades on
     its first concurrent publish (old snapshots stay time-travel
     readable). The default (False) keeps the byte-identical single-writer
@@ -359,7 +393,28 @@ class ParquetTable:
                 continue
         return out
 
-    def _publish(self, df: DataFrame) -> int:
+    def _snapshot(self) -> "tuple[int | None, DataFrame | None]":
+        """The version a merge builds on, and its rows. The version is taken
+        BEFORE the read, so a commit racing in between can only make a
+        concurrent publish lose (and retry), never overwrite the racer."""
+        base = self.current_version()
+        try:
+            return base, self.read()
+        except (Py4JJavaError, PySparkException) as exc:
+            # the read lists and footers the snapshot's files; a newer
+            # commit's retention prune can delete them mid-read
+            if not self.concurrent_writers or self.current_version() == base:
+                raise
+            raise ConcurrentPublishError(
+                f"{self.root!r} moved past version {base} while the merge "
+                "read it; re-read and retry"
+            ) from exc
+
+    def _publish(self, df: DataFrame, base=_UNCHECKED) -> int:
+        """Commit ``df`` as the next version. ``base`` is the version the
+        merge that built ``df`` read (``_snapshot``); under
+        ``concurrent_writers`` a publish whose base is no longer current
+        loses, since committing it would drop the newer commit's rows."""
         cur = self.current_version()
         if cur is None:
             # Fresh table vs lost pointer: a crashed FIRST publish leaves at
@@ -380,6 +435,11 @@ class ParquetTable:
                 )
         v = (cur or 0) + 1
         if self.concurrent_writers:
+            if base is not _UNCHECKED and cur != base:
+                raise ConcurrentPublishError(
+                    f"{self.root!r} moved from version {base} to {cur} "
+                    "since the merge read it; re-read and retry"
+                )
             # current_version skips markers with crashed (content-less)
             # claims, so claim STRICTLY ABOVE every existing marker number —
             # otherwise a publish after such a crash would collide with the
@@ -419,7 +479,20 @@ class ParquetTable:
         relies on)."""
         name = f"v={v}-{uuid.uuid4().hex[:8]}"
         path = fsio.join(self.root, name)
-        df.write.parquet(path)
+        try:
+            df.write.parquet(path)
+        except (Py4JJavaError, PySparkException) as exc:
+            # A commit at or past v means another writer won since this
+            # merge read its snapshot, and that winner's retention prune may
+            # have deleted the files the write was still scanning: the
+            # failure is the lost race, not a fault — retry on top of it.
+            if (self.current_version() or 0) < v:
+                raise
+            self._fs.delete(path, recursive=True)
+            raise ConcurrentPublishError(
+                f"version {v} of {self.root!r} was committed by another "
+                "writer while this merge was writing; re-read and retry"
+            ) from exc
         if not self._fs.create_exclusive(
             fsio.join(self._commits, str(v)), name
         ):
@@ -453,31 +526,30 @@ class ParquetTable:
     def append_history(self, batch: DataFrame, key: Sequence[str] = HISTORY_KEY) -> int:
         """Op 19: append batch rows not already in history; returns inserted
         count (the reference returns executemany rowcounts,
-        staging_repo.py:52-58)."""
-        existing = self.read()
+        staging_repo.py:52-58). Counted BEFORE publishing so a batch with
+        nothing new (an idle cycle's redelivered lookback) rewrites nothing."""
+        base, existing = self._snapshot()
         inserted, full = history_merge(existing, batch, key)
         n = inserted.count()
-        if existing is None:
-            self._publish(inserted)
-        elif n:
-            self._publish(full)
+        if existing is None or n:
+            self._publish(full, base)
         return n
 
     def delete_keys(self, keys: DataFrame, key: str = LATEST_KEY) -> int:
         """Targeted deletion (dataset redaction / right-to-be-forgotten):
         remove every row whose ``key`` appears in ``keys``; returns the
-        deleted count. Expressed as one left-anti join + republish — the
-        same plan a Delta ``DELETE WHERE key IN (…)`` runs after file
-        pruning; on the bucket-partitioned sink only the touched buckets
-        rewrite."""
-        existing = self.read()
+        deleted count. One left-semi count, then a left-anti republish only
+        if anything matched — the same plan a Delta ``DELETE WHERE key IN
+        (…)`` runs after file pruning; on the bucket-partitioned sink only
+        the touched buckets run it."""
+        base, existing = self._snapshot()
         if existing is None:
             return 0
-        kdf = keys.select(F.col(_single_key_column(keys, key)).alias(key)).distinct()
-        kept = existing.join(kdf, on=key, how="left_anti").localCheckpoint()
-        n_deleted = existing.count() - kept.count()
+        # semi/anti joins never multiply rows, so duplicate keys need no distinct
+        kdf = keys.select(F.col(_single_key_column(keys, key)).alias(key))
+        n_deleted = existing.join(kdf, on=key, how="left_semi").count()
         if n_deleted:
-            self._publish(kept)
+            self._publish(existing.join(kdf, on=key, how="left_anti"), base)
         return n_deleted
 
     def upsert_latest(
@@ -486,19 +558,18 @@ class ParquetTable:
         key: str = LATEST_KEY,
         ts_col: str = "updated_at",
     ) -> int:
-        """Op 20: newer-wins upsert; returns affected-row count (rows whose
-        stored image changed — insert or strictly-newer update)."""
-        existing = self.read()
-        result = latest_merge(existing, batch, key, ts_col).localCheckpoint()
-        if existing is None:
-            affected = result.count()
-        else:
-            # affected = rows in result differing from existing (new id, or newer ts)
-            old = existing.select(F.col(key).alias("__k"), F.col(ts_col).alias("__old_ts"))
-            affected = (
-                result.join(old, on=result[key] == old["__k"], how="left")
-                .filter(F.col("__old_ts").isNull() | (F.col(ts_col) > F.col("__old_ts")))
-                .count()
-            )
-        self._publish(result)
-        return affected
+        """Op 20: newer-wins upsert; returns affected-row count — the
+        winners that came from the batch (an insert, or a strictly newer
+        update; a tie keeps the stored row and counts 0). The count is an
+        observed metric of the publish write itself, so the merge runs once
+        and the old snapshot is read once."""
+        base, existing = self._snapshot()
+        obs = Observation()
+        winners = _latest_winners(existing, batch, key, ts_col)
+        self._publish(
+            winners.observe(
+                obs, F.count(F.when(F.col("__is_existing") == 0, 1)).alias("affected")
+            ).drop("__is_existing"),
+            base,
+        )
+        return obs.get["affected"]

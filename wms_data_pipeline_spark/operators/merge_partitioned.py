@@ -3,13 +3,14 @@
 ``ParquetTable`` (merge.py) rewrites the whole table per merge: correct and
 cheap for latest-state/control tables, wrong for a 100 TB history. This
 sink partitions the table by a stable hash bucket of the business key
-(``pmod(hash(id), n_buckets)`` → ``b=<k>`` directories) so a merge:
+(``pmod(hash(id), n_buckets)`` → ``b=<k>`` directories) and makes each
+bucket directory a ``ParquetTable`` of its own (``v=<n>/`` + ``_VERSION``),
+so a merge:
 
 1. computes the bucket set present in the incoming batch (tiny agg);
-2. reads ONLY those bucket directories (partition pruning on `b`);
-3. merges (same pure functions: history_merge / latest_merge);
-4. atomically replaces only the touched bucket directories (versioned
-   subdirs + pointer flip per bucket).
+2. runs the bucket's ``ParquetTable`` merge on that bucket's slice of the
+   batch — which reads, merges, counts and atomically publishes ONLY that
+   bucket, under the one pointer protocol and crash guards of ``merge.py``.
 
 Untouched buckets are never read or written — merge cost scales with batch
 size, not table size. This is the same contract a Delta/Iceberg MERGE with
@@ -29,10 +30,8 @@ from wms_data_pipeline_spark import fsio
 from wms_data_pipeline_spark.operators.merge import (
     HISTORY_KEY,
     LATEST_KEY,
-    CorruptTablePointerError,
+    ParquetTable,
     _single_key_column,
-    history_merge,
-    latest_merge,
 )
 
 BUCKET_COL = "__bucket"
@@ -45,150 +44,60 @@ class PartitionedMergeTable:
         self.root = root
         self.key = key
         self.n_buckets = n_buckets
-        # Pointer I/O through the Hadoop FS — warehouse root may be
-        # file:// / hdfs:// / s3a:// (atomicity per scheme: see fsio).
-        self._fs = fsio.TableFS(spark, root)
+        self._buckets: dict[int, ParquetTable] = {}
 
-    # -- bucket plumbing ----------------------------------------------------
-    def _with_bucket(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(
+    def bucket(self, b: int) -> ParquetTable:
+        """The ``b=<k>`` directory as the ParquetTable that owns its
+        versions."""
+        if b not in self._buckets:
+            self._buckets[b] = ParquetTable(self.spark, fsio.join(self.root, f"b={b}"))
+        return self._buckets[b]
+
+    def _by_bucket(self, df: DataFrame):
+        """``(bucket, df's rows in it)`` for every bucket ``df`` touches. The
+        bucketed frame is pinned once (lazily) because the bucket probe and
+        every per-bucket merge each read it."""
+        df_b = df.withColumn(
             BUCKET_COL, F.pmod(F.hash(F.col(self.key)), F.lit(self.n_buckets))
-        )
-
-    def _bucket_dir(self, b: int) -> str:
-        return fsio.join(self.root, f"b={b}")
-
-    def _pointer(self, b: int) -> str:
-        return fsio.join(self._bucket_dir(b), "_VERSION")
-
-    def _current_version(self, b: int) -> int | None:
-        # read_text_committed: a flip that crashed inside the HDFS
-        # non-overwriting-rename window recovers to the .old pointer — the
-        # previous committed version — instead of a missing one (ADVICE r12)
-        raw = self._fs.read_text_committed(self._pointer(b))
-        if raw is None:
-            return None
-        raw = raw.strip()
-        try:
-            return int(raw)
-        except ValueError:
-            raise CorruptTablePointerError(
-                f"unreadable _VERSION pointer at {self._pointer(b)!r} "
-                f"(content {raw!r}); restore it before reading or publishing"
-            )
-
-    def _read_bucket(self, b: int) -> DataFrame | None:
-        v = self._current_version(b)
-        if v is None:
-            return None
-        return self.spark.read.parquet(fsio.join(self._bucket_dir(b), f"v={v}"))
-
-    def _publish_bucket(self, b: int, df: DataFrame) -> None:
-        cur = self._current_version(b)
-        if cur is None:
-            # Same guard as ParquetTable._publish: a missing pointer next to
-            # a v>=2 dir means the pointer was lost after a committed flip —
-            # refuse rather than overwrite committed data (advisor r2).
-            stale = [
-                name for name in self._fs.list_names(self._bucket_dir(b))
-                if name.startswith("v=") and name != "v=1"
-            ]
-            if stale:
-                raise CorruptTablePointerError(
-                    f"_VERSION pointer missing at {self._pointer(b)!r} but "
-                    f"committed version dirs exist: {sorted(stale)}"
-                )
-        v = (cur or 0) + 1
-        path = fsio.join(self._bucket_dir(b), f"v={v}")
-        # Pointer flip is the commit record; overwrite reclaims a stale
-        # uncommitted v=N+1 left by a crash between write and flip.
-        df.write.mode("overwrite").parquet(path)
-        self._fs.write_text_atomic(self._pointer(b), str(v))
-        if v > 1:
-            self._fs.delete(fsio.join(self._bucket_dir(b), f"v={v - 1}"),
-                            recursive=True)
+        ).localCheckpoint(eager=False)
+        buckets = sorted(r[0] for r in df_b.select(BUCKET_COL).distinct().collect())
+        return [(b, df_b.filter(F.col(BUCKET_COL) == b)) for b in buckets]
 
     def read_all(self) -> DataFrame | None:
-        frames = [
-            self._read_bucket(b)
-            for b in range(self.n_buckets)
-            if self._current_version(b) is not None
-        ]
-        frames = [f for f in frames if f is not None]
-        if not frames:
+        paths = []
+        for b in range(self.n_buckets):
+            t = self.bucket(b)
+            v = t.current_version()
+            if v is not None:
+                paths.append(t._version_path(v))
+        if not paths:
             return None
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out.drop(BUCKET_COL)
-
-    def _touched_buckets(self, batch_b: DataFrame) -> list[int]:
-        return sorted(
-            r[BUCKET_COL] for r in batch_b.select(BUCKET_COL).distinct().collect()
-        )
+        return self.spark.read.parquet(*paths).drop(BUCKET_COL)
 
     # -- merge API ----------------------------------------------------------
     def delete_keys(self, keys: DataFrame) -> int:
         """Targeted deletion (dataset redaction) with BUCKET PRUNING: the
-        deletion key set maps to its hash buckets, and ONLY those bucket
-        directories are read, anti-joined, and republished — cost scales
-        with the deletion set, never table size (the same file-pruned
-        shape as a Delta DELETE). Returns the deleted count."""
-        kcol = _single_key_column(keys, self.key)
-        kdf = self._with_bucket(
-            keys.select(F.col(kcol).alias(self.key)).distinct()
-        ).localCheckpoint(eager=False)
-        deleted = 0
-        for b in self._touched_buckets(kdf):
-            existing = self._read_bucket(b)
-            if existing is None:
-                continue
-            bucket_keys = kdf.filter(F.col(BUCKET_COL) == b).select(self.key)
-            kept = existing.join(bucket_keys, on=self.key, how="left_anti")
-            kept = kept.localCheckpoint()
-            n = existing.count() - kept.count()
-            if n:
-                self._publish_bucket(b, kept)
-                deleted += n
-        return deleted
+        deletion key set maps to its hash buckets, and ONLY those buckets
+        run ``ParquetTable.delete_keys`` — cost scales with the deletion
+        set, never table size (the same file-pruned shape as a Delta
+        DELETE). Returns the deleted count."""
+        kdf = keys.select(F.col(_single_key_column(keys, self.key)).alias(self.key))
+        return sum(
+            self.bucket(b).delete_keys(part.select(self.key), key=self.key)
+            for b, part in self._by_bucket(kdf)
+        )
 
     def upsert_latest(self, batch: DataFrame, ts_col: str = "updated_at") -> int:
         """Op 20 at scale: newer-wins upsert touching only the batch's
         buckets. Returns affected-row count."""
-        batch_b = self._with_bucket(batch).localCheckpoint(eager=False)
-        affected = 0
-        for b in self._touched_buckets(batch_b):
-            incoming = batch_b.filter(F.col(BUCKET_COL) == b)
-            existing = self._read_bucket(b)
-            merged = latest_merge(existing, incoming, key=self.key, ts_col=ts_col)
-            merged = merged.localCheckpoint()
-            if existing is None:
-                affected += merged.count()
-            else:
-                old = existing.select(
-                    F.col(self.key).alias("__k"), F.col(ts_col).alias("__old_ts")
-                )
-                affected += (
-                    merged.join(old, on=merged[self.key] == old["__k"], how="left")
-                    .filter(F.col("__old_ts").isNull() | (F.col(ts_col) > F.col("__old_ts")))
-                    .count()
-                )
-            self._publish_bucket(b, merged)
-        return affected
+        return sum(
+            self.bucket(b).upsert_latest(part, key=self.key, ts_col=ts_col)
+            for b, part in self._by_bucket(batch)
+        )
 
     def append_history(self, batch: DataFrame, key: Sequence[str] = HISTORY_KEY) -> int:
         """Op 19 at scale: append-dedup touching only the batch's buckets."""
-        batch_b = self._with_bucket(batch).localCheckpoint(eager=False)
-        inserted = 0
-        for b in self._touched_buckets(batch_b):
-            incoming = batch_b.filter(F.col(BUCKET_COL) == b)
-            existing = self._read_bucket(b)
-            new_rows, full = history_merge(existing, incoming, key=key)
-            new_rows = new_rows.localCheckpoint()
-            n = new_rows.count()
-            inserted += n
-            if existing is None:
-                self._publish_bucket(b, new_rows)
-            elif n:
-                self._publish_bucket(b, full)
-        return inserted
+        return sum(
+            self.bucket(b).append_history(part, key=key)
+            for b, part in self._by_bucket(batch)
+        )

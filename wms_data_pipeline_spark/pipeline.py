@@ -321,7 +321,12 @@ def scheduled_runs(
     a run longer than the interval triggers the next tick immediately, it
     does not stack). Generator, so the caller controls lifetime;
     ``max_runs`` bounds it for tests/backfills. Each tick is incremental by
-    watermark, so a tick with no upstream changes is a cheap no-op run.
+    watermark, but a tick with no upstream changes is NOT a no-op: the
+    extractor re-reads the ``lookback_seconds`` window (120 s by default)
+    behind the watermark and re-stages it through both merges, so it costs
+    nearly as much as a small tick (``perfbench/NOTES.md``, 3,000-row
+    ``elt_reference`` on 4 cores: 5.3 s median against 6.4 s for a 200-row
+    tick).
     """
     runs = 0
     while max_runs is None or runs < max_runs:
