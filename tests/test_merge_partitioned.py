@@ -1,11 +1,9 @@
 """Bucket-partitioned merge table: the merge contract it shares with
-ParquetTable (one test over both sinks), plus the pruning property — a
-merge only touches the batch's buckets."""
+ParquetTable (each contract test runs over both sinks), plus the pruning
+property — a merge only touches the batch's buckets."""
 
 import os
 from datetime import datetime
-
-import pytest
 
 from wms_data_pipeline_spark.operators.merge import ParquetTable
 from wms_data_pipeline_spark.operators.merge_partitioned import PartitionedMergeTable
@@ -35,36 +33,43 @@ def _read(t):
     return t.read() if isinstance(t, ParquetTable) else t.read_all()
 
 
-@pytest.mark.parametrize("sink", [ParquetTable, PartitionedMergeTable])
-def test_sink_contract(spark, tmp_path, sink):
-    """The merge contract both parquet sinks share: newer wins, stale and
-    equal timestamps are rejected and count 0, a replay counts 0 (also for
-    a NULL ``updated_at`` on both sides — the stored row does not change),
-    and a history rerun is a no-op."""
+SINKS = (ParquetTable, PartitionedMergeTable)
 
-    def table(name):
-        if sink is ParquetTable:
-            return ParquetTable(spark, str(tmp_path / name))
-        return PartitionedMergeTable(spark, str(tmp_path / name), n_buckets=8)
 
-    t = table("latest")
-    first = _rec(spark, [("a", T2, "new", "h2"), ("b", T1, "pb", "h1")])
-    assert t.upsert_latest(first) == 2
-    assert t.upsert_latest(first) == 0  # equal-timestamp replay
-    assert t.upsert_latest(_rec(spark, [("a", T1, "old", "h1")])) == 0
-    assert t.upsert_latest(_rec(spark, [("a", T2, "equal", "h3")])) == 0
-    assert t.upsert_latest(_rec(spark, [("a", datetime(2026, 1, 2), "newest", "h4")])) == 1
-    assert {r["id"]: r["payload"] for r in _read(t).collect()} == {"a": "newest", "b": "pb"}
+def _table(spark, sink, path):
+    if sink is ParquetTable:
+        return ParquetTable(spark, str(path))
+    return PartitionedMergeTable(spark, str(path), n_buckets=8)
 
-    assert t.upsert_latest(_rec(spark, [("n", None, "stored", "h5")])) == 1
-    assert t.upsert_latest(_rec(spark, [("n", None, "incoming", "h6")])) == 0
-    assert {r["id"]: r["payload"] for r in _read(t).collect()}["n"] == "stored"
 
-    h = table("hist")
-    batch = _rec(spark, [("a", T1, "p", "h1"), ("b", T1, "p", "h2")])
-    assert h.append_history(batch) == 2
-    assert h.append_history(batch) == 0
-    assert _read(h).count() == 2
+def test_latest_invariants(spark, tmp_path):
+    """The latest-state contract both parquet sinks share: newer wins,
+    stale and equal timestamps are rejected and count 0, a replay counts 0
+    (also for a NULL ``updated_at`` on both sides — the stored row does
+    not change)."""
+    for sink in SINKS:
+        t = _table(spark, sink, tmp_path / f"latest_{sink.__name__}")
+        first = _rec(spark, [("a", T2, "new", "h2"), ("b", T1, "pb", "h1")])
+        assert t.upsert_latest(first) == 2
+        assert t.upsert_latest(first) == 0  # equal-timestamp replay
+        assert t.upsert_latest(_rec(spark, [("a", T1, "old", "h1")])) == 0
+        assert t.upsert_latest(_rec(spark, [("a", T2, "equal", "h3")])) == 0
+        assert t.upsert_latest(_rec(spark, [("a", datetime(2026, 1, 2), "newest", "h4")])) == 1
+        assert {r["id"]: r["payload"] for r in _read(t).collect()} == {"a": "newest", "b": "pb"}
+
+        assert t.upsert_latest(_rec(spark, [("n", None, "stored", "h5")])) == 1
+        assert t.upsert_latest(_rec(spark, [("n", None, "incoming", "h6")])) == 0
+        assert {r["id"]: r["payload"] for r in _read(t).collect()}["n"] == "stored"
+
+
+def test_history_rerun_noop(spark, tmp_path):
+    """A history rerun is a no-op on both parquet sinks."""
+    for sink in SINKS:
+        h = _table(spark, sink, tmp_path / f"hist_{sink.__name__}")
+        batch = _rec(spark, [("a", T1, "p", "h1"), ("b", T1, "p", "h2")])
+        assert h.append_history(batch) == 2
+        assert h.append_history(batch) == 0
+        assert _read(h).count() == 2
 
 
 def test_merge_prunes_untouched_buckets(spark, tmp_path):
