@@ -112,3 +112,24 @@ def test_delete_keys_prunes_buckets(spark, tmp_path):
         assert moved == (b in target_buckets and versions_before[b] is not None)
     # idempotent
     assert t.delete_keys(forget) == 0
+
+
+def test_bucket_merges_release_their_pin(spark, tmp_path):
+    """Each bucketed merge releases the batch frame it pins for the bucket
+    probe and the per-bucket merges: the persistent-RDD count is the same
+    after ``upsert_latest``, ``append_history`` and ``delete_keys`` as
+    before each call (it used to grow by one per call)."""
+    jsc = spark.sparkContext._jsc
+    batch = _rec(spark, [(f"k{i}", T1, f"p{i}", f"h{i}") for i in range(40)])
+    latest = PartitionedMergeTable(spark, str(tmp_path / "latest"), n_buckets=8)
+    hist = PartitionedMergeTable(spark, str(tmp_path / "hist"), n_buckets=8)
+    calls = [
+        ("upsert_latest", lambda: latest.upsert_latest(batch), 40),
+        ("append_history", lambda: hist.append_history(batch), 40),
+        ("delete_keys",
+         lambda: latest.delete_keys(spark.createDataFrame([("k3",)], "id string")), 1),
+    ]
+    for name, call, want in calls:
+        pinned = jsc.getPersistentRDDs().size()
+        assert call() == want, name
+        assert jsc.getPersistentRDDs().size() == pinned, name

@@ -98,7 +98,8 @@ def test_truncated_interlaced_gif_raises_at_decode():
 def test_classifier_weighted_matches_fold_bitwise(spark):
     """classifier_score(weights=full hex64-derived vocab) must reproduce
     the codegen fold bit-for-bit on every input class (verdict r10 task 1:
-    the deployed Arrow-closure shape promoted from tools/ab_round10_ops)."""
+    the deployed Arrow-closure shape, SCALE_NOTES r10 classifier A/B;
+    re-measure with tools/ab.py)."""
     from pyspark.sql import functions as F
 
     from wms_data_pipeline_spark.operators import text as txt

@@ -116,12 +116,55 @@ def test_containment_broadcast_probe_empty_and_null_inputs(spark):
     assert got == [(1, 4, 1.0)]
 
 
+def test_containment_few_huge_probe_docs_not_collected(spark, monkeypatch):
+    """The broadcast gate sizes the probe with one aggregate BEFORE any
+    collect: a few docs whose summed tokens exceed the driver budget run
+    the join path, and their token arrays never reach the driver — even
+    when their exact vocabulary x docs matrix would fit (the old gate
+    collected up to MAX_BROADCAST_PROBE_DOCS + 1 full arrays first). Pairs
+    still equal the brute force."""
+    from pyspark.sql import functions as F
+
+    from wms_data_pipeline_spark.operators import dedup as dd
+
+    w = [f"w{i}" for i in range(400)]
+    docs = spark.createDataFrame(
+        [(1, " ".join(w[:300])), (2, " ".join(w[100:])), (3, " ".join(w[:250])),
+         (4, "w1 w2")],
+        "doc_id long, text string",
+    )
+    probe = docs.filter(F.col("doc_id") <= 3)
+    # 850 probe tokens x 64 driver bytes > the budget; vocab 400 x 3 fits it
+    monkeypatch.setattr(dd, "MAX_PROBE_MEMBERSHIP_BYTES", 64 * 800)
+    frame_cls = type(docs)
+    collect, collected = frame_cls.collect, []
+
+    def spy(self):
+        collected.append(self.columns)
+        return collect(self)
+
+    monkeypatch.setattr(frame_cls, "collect", spy)
+    got = sorted(
+        map(tuple, dd.containment_join(probe, docs, threshold=0.8).collect())
+    )
+    assert not [c for c in collected if "__tka" in c], collected
+    sets = {i: set(t.split()) for i, t in docs.collect()}
+    want = sorted(
+        (a, b, round(len(sets[a] & sets[b]) / len(sets[a]), 6))
+        for a in (1, 2, 3)
+        for b in sets
+        if a != b and len(sets[a] & sets[b]) * 10 >= 8 * len(sets[a])
+    )
+    assert got == want == [(1, 3, 0.833333), (3, 1, 1.0)]
+
+
 def test_prefix_jaccard_positional_filter_loses_no_pairs(spark):
-    """The r15 PPJoin positional + length prunes must be pure candidate
-    prunes: results equal the all-pairs brute force on a dense
-    small-vocabulary corpus (the regime where the bare prefix rule is
-    non-selective and the positional bound does the pruning), including
-    boundary pairs at exactly J = t."""
+    """prefix_jaccard_join loses no pair: results equal the all-pairs
+    brute force on a dense small-vocabulary corpus (the regime where the
+    prefix rule is least selective), including boundary pairs at exactly
+    J = t. Named for the r15 PPJoin positional + length prunes it first
+    pinned; those were deleted after an A/B showed no wall-time gain
+    (OPTIMIZATION_r15.md), and the pin now holds the bare prefix filter."""
     import itertools
 
     from pyspark.sql import functions as F

@@ -51,10 +51,15 @@ EXPECTED_DUP_FRACTION = 0.25
 #: ZERO pair shuffles. Same contract class as similarity's
 #: MAX_CLOSURE_QUERIES guard. Above either gate the generic
 #: prefix-filter join runs unchanged (the 100 TB any-sized-probe path).
+#: Measured 7.77 -> 1.92 s median on dd_containment_pairs at sf0.1, 10 of
+#: 10 interleaved pairs; sizing the probe before its collect adds ~0.3 s
+#: (OPTIMIZATION_r15.md).
 MAX_BROADCAST_PROBE_DOCS = 4096
 #: bound on the probe-vocabulary × probe-docs membership matrix each
 #: task holds (uint8 cells): 256 MB keeps the closure broadcastable and
-#: the per-task footprint bounded even for token-heavy probes.
+#: the per-task footprint bounded even for token-heavy probes. The same
+#: budget bounds the driver-side collect before it runs, at 64 bytes per
+#: probe token (a short ``str`` in a row list and a set): 4M tokens.
 MAX_PROBE_MEMBERSHIP_BYTES = 1 << 28
 
 
@@ -133,10 +138,11 @@ def shingle_hash_col(shingles: Column, hash_family: str = "md5") -> Column:
     bit-reproducible across engines. ``"xxhash64"`` is the production
     profile: Spark's native codegen intrinsic, MEASURED 1.79× faster for
     the whole signature stage at the 640k-doc stress scale (34.5 s →
-    19.3 s, tools/ab_hashfamily.py), with no cross-engine reproducibility
-    claim (signatures differ from the md5 family but near-dup detection
-    quality is equivalent — pair-set Jaccard 0.996 on the same corpus,
-    and the permutation layer only needs a uniform base hash; recall
+    19.3 s, SCALE_NOTES "Known trade-offs"; A/B with tools/ab.py), with no
+    cross-engine reproducibility claim (signatures differ from the md5
+    family but near-dup detection quality is equivalent — pair-set
+    Jaccard 0.996 on the same corpus, and the permutation layer only
+    needs a uniform base hash; recall
     equivalence is pinned by test_hash_family_pair_recall_equivalent)."""
     if hash_family == "md5":
         return F.transform(
@@ -1460,60 +1466,19 @@ def prefix_jaccard_join(
     ordered = ordered.localCheckpoint(eager=False)  # pref + both verify sides
     sz = F.size("__arr")
     plen = sz - F.expr(f"({num}L * size(__arr) + {den - 1}) div {den}") + F.lit(1)
-    # r15: carry the doc size and the 0-based prefix position through the
-    # candidate join — they fund PPJoin's two lossless pair prunes (the
-    # r14 containment length bound, measured 1.3% there, prunes 3.4x HERE:
-    # 11.3M -> 3.3M candidate pairs on the sf0.1 registry query, where the
-    # 31-token vocabulary makes the bare prefix rule nearly non-selective).
+    # no PPJoin length/positional prunes here: they cut candidates 11.3M ->
+    # 3.3M on the sf0.1 registry query but bought no wall time (A/B in
+    # OPTIMIZATION_r15.md: 3.70 -> 3.55 s median, inside the 0.48 s IQR)
     pref = ordered.select(
-        F.col("__id"),
-        F.size("__arr").cast("long").alias("__sz"),
-        F.posexplode(F.slice("__arr", 1, plen)).alias("__pp", "__p"),
+        "__id", F.explode(F.slice("__arr", 1, plen)).alias("__p")
     )
-    a = pref.select(
-        F.col("__id").alias("id_a"),
-        F.col("__sz").alias("__sza"),
-        F.col("__pp").alias("__pa"),
-        "__p",
-    )
-    b = pref.select(
-        F.col("__id").alias("id_b"),
-        F.col("__sz").alias("__szb"),
-        F.col("__pp").alias("__pb"),
-        "__p",
-    )
-    # positional bound (PPJoin, public literature): both arrays share ONE
-    # global (freq, token) order, so for a match at 0-based positions
-    # (pa, pb) the common tokens before it number at most min(pa, pb) and
-    # after it at most min(|a|-pa-1, |b|-pb-1); with the match itself,
-    # inter <= min(pa,pb) + 1 + min(|a|-pa-1, |b|-pb-1) — an upper bound
-    # valid for EVERY shared token, so the min over the observed matches
-    # bounds the true intersection and pruning on it is lossless. All
-    # compares in exact integer arithmetic on longs (an int32 product
-    # overflows at |doc| >= 2148 tokens x the e6 rational).
-    ub = (
-        F.least("__pa", "__pb")
-        + 1
-        + F.least(
-            F.col("__sza") - F.col("__pa") - 1,
-            F.col("__szb") - F.col("__pb") - 1,
-        )
-    )
+    a = pref.select(F.col("__id").alias("id_a"), "__p")
+    b = pref.select(F.col("__id").alias("id_b"), "__p")
     cand = (
         a.join(b, "__p")
-        .filter(
-            (F.col("id_a") < F.col("id_b"))
-            # length filter: J >= t forces t*|a| <= |b| <= |a|/t
-            & (F.col("__sza") * num <= F.col("__szb") * den)
-            & (F.col("__szb") * num <= F.col("__sza") * den)
-        )
-        .groupBy("id_a", "id_b", "__sza", "__szb")
-        .agg(F.min(ub).alias("__ub"))
-        # J >= t  <=>  inter*(den+num) >= num*(|a|+|b|)
-        .filter(
-            F.col("__ub") * (den + num) >= num * (F.col("__sza") + F.col("__szb"))
-        )
+        .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
+        .dropDuplicates(["id_a", "id_b"])
     )
     fetch = cand.join(
         ordered.select(F.col("__id").alias("id_a"), F.col("__arr").alias("__arr_a")),
@@ -1670,16 +1635,27 @@ def containment_join(
     pairs on the sf0.1 registry query; this shape shuffles none. The
     threshold compare stays exact integer (``inter * den >= num *
     |a|``), the division + HALF_UP round stay JVM-side, so the output
-    is bit-identical (pinned both-paths in test_round15_opt). Above the
-    gates the r14 prefix-filter join runs unchanged."""
+    is bit-identical (pinned both-paths in test_round15_opt). One
+    aggregate (doc count, summed token count) sizes the probe first, so
+    nothing is collected for a probe the gates reject. Above the gates
+    the r14 prefix-filter join runs unchanged."""
     num = int(round(threshold * 1_000_000))
     den = 1_000_000
     p = probe.select(
         F.col(id_col).alias("id_a"),
         F.array_distinct(tokens_of(colname)).alias("__tka"),
     ).filter(F.size("__tka") > 0)
-    p_rows = p.limit(MAX_BROADCAST_PROBE_DOCS + 1).collect()
-    if len(p_rows) <= MAX_BROADCAST_PROBE_DOCS:
+    # one aggregate sizes the probe BEFORE anything reaches the driver: a
+    # few huge docs must not be collected only to fail the byte gate
+    size = p.agg(
+        F.count(F.lit(1)).alias("n"), F.sum(F.size("__tka")).alias("tok")
+    ).collect()[0]
+    n_tok = size.tok or 0
+    if (
+        size.n <= MAX_BROADCAST_PROBE_DOCS
+        and n_tok * 64 <= MAX_PROBE_MEMBERSHIP_BYTES
+    ):
+        p_rows = p.collect()
         a_sets = [set(r[1]) for r in p_rows]
         vocab = {t for s in a_sets for t in s}
         if len(vocab) * max(len(a_sets), 1) <= MAX_PROBE_MEMBERSHIP_BYTES:

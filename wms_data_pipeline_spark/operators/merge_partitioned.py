@@ -20,6 +20,7 @@ stays dependency-free. Single-writer discipline, like the reference.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,15 +54,21 @@ class PartitionedMergeTable:
             self._buckets[b] = ParquetTable(self.spark, fsio.join(self.root, f"b={b}"))
         return self._buckets[b]
 
+    @contextmanager
     def _by_bucket(self, df: DataFrame):
         """``(bucket, df's rows in it)`` for every bucket ``df`` touches. The
-        bucketed frame is pinned once (lazily) because the bucket probe and
-        every per-bucket merge each read it."""
+        bucketed frame is persisted once because the bucket probe and every
+        per-bucket merge each read it, and released when the caller's bucket
+        loop ends. ``persist`` is evictable: a lost block recomputes ``df``
+        from its lineage, so ``df`` must be replayable (a batch is)."""
         df_b = df.withColumn(
             BUCKET_COL, F.pmod(F.hash(F.col(self.key)), F.lit(self.n_buckets))
-        ).localCheckpoint(eager=False)
-        buckets = sorted(r[0] for r in df_b.select(BUCKET_COL).distinct().collect())
-        return [(b, df_b.filter(F.col(BUCKET_COL) == b)) for b in buckets]
+        ).persist()
+        try:
+            buckets = sorted(r[0] for r in df_b.select(BUCKET_COL).distinct().collect())
+            yield [(b, df_b.filter(F.col(BUCKET_COL) == b)) for b in buckets]
+        finally:
+            df_b.unpersist()
 
     def read_all(self) -> DataFrame | None:
         paths = []
@@ -82,22 +89,24 @@ class PartitionedMergeTable:
         set, never table size (the same file-pruned shape as a Delta
         DELETE). Returns the deleted count."""
         kdf = keys.select(F.col(_single_key_column(keys, self.key)).alias(self.key))
-        return sum(
-            self.bucket(b).delete_keys(part.select(self.key), key=self.key)
-            for b, part in self._by_bucket(kdf)
-        )
+        with self._by_bucket(kdf) as parts:
+            return sum(
+                self.bucket(b).delete_keys(part.select(self.key), key=self.key)
+                for b, part in parts
+            )
 
     def upsert_latest(self, batch: DataFrame, ts_col: str = "updated_at") -> int:
         """Op 20 at scale: newer-wins upsert touching only the batch's
         buckets. Returns affected-row count."""
-        return sum(
-            self.bucket(b).upsert_latest(part, key=self.key, ts_col=ts_col)
-            for b, part in self._by_bucket(batch)
-        )
+        with self._by_bucket(batch) as parts:
+            return sum(
+                self.bucket(b).upsert_latest(part, key=self.key, ts_col=ts_col)
+                for b, part in parts
+            )
 
     def append_history(self, batch: DataFrame, key: Sequence[str] = HISTORY_KEY) -> int:
         """Op 19 at scale: append-dedup touching only the batch's buckets."""
-        return sum(
-            self.bucket(b).append_history(part, key=key)
-            for b, part in self._by_bucket(batch)
-        )
+        with self._by_bucket(batch) as parts:
+            return sum(
+                self.bucket(b).append_history(part, key=key) for b, part in parts
+            )

@@ -2772,22 +2772,8 @@ def encode_jpeg_progressive(
                         put(eobrun - (1 << r), r)
                     eobrun = 0
 
-            # r15 fast skip: a block whose whole band quantizes to zero at
-            # this precision only extends the EOB run — the common case
-            # for near-constant blocks (DC-only). One vectorized integer
-            # pass applies the IDENTICAL |v| >> AL significance test, so
-            # the emitted bytes cannot change; per-block Python list work
-            # runs only for blocks that actually code coefficients.
-            zeroband = ~(
-                (np.abs(cf[:bh, :bw, ss : se + 1]) >> AL) != 0
-            ).any(axis=2)
             for by in range(bh):
                 for bx in range(bw):
-                    if zeroband[by, bx]:
-                        eobrun += 1
-                        if eobrun == 0x7FFF:
-                            flush_eob()
-                        continue
                     blk = cf[by, bx]
                     t = [
                         (1 if blk[k] > 0 else -1) * (abs(int(blk[k])) >> AL)
@@ -2846,21 +2832,8 @@ def encode_jpeg_progressive(
                     eobrun = 0
 
             band = se - ss + 1
-            # r15 fast skip (mirror of ac_first's): no significant history
-            # AND no newly-significant coefficient in the band means the
-            # block contributes nothing but an EOB-run increment — no
-            # correction bits either, so skipping the per-block list work
-            # is byte-exact. Same integer significance tests, vectorized.
-            bandv = cf[:bh, :bw, ss : se + 1]
-            histM = (np.abs(bandv) >> AL) != 0
-            inert = ~(histM.any(axis=2) | ((~histM) & (bandv != 0)).any(axis=2))
             for by in range(bh):
                 for bx in range(bw):
-                    if inert[by, bx]:
-                        eobrun += 1
-                        if eobrun == 0x7FFF:
-                            flush_eob()
-                        continue
                     blk = cf[by, bx]
                     # significant-so-far = nonzero at the PREVIOUS scan's
                     # precision (Ah = AL): |c| >> AL != 0

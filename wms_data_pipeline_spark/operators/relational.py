@@ -291,7 +291,8 @@ def weighted_median(
 
 #: ``grid_distance_join(strategy="auto")`` takes the broadcast
 #: nested-loop plan when the RIGHT side has at most this many rows.
-#: Measured crossover (SCALE_NOTES r9, `ab_round9_ops.py grid`): at
+#: Measured crossover (SCALE_NOTES r9 grid A/B; re-measure with
+#: tools/ab.py): at
 #: 200k x 2k the codegen'd theta join wins (0.87 s vs 2.45 s — the 9x
 #: explode + shuffle costs more than |L|x|R| integer compares against a
 #: broadcast build); by 1M x 20k the grid is 2.2x faster and the gap
@@ -399,8 +400,8 @@ def grid_distance_join(
 MAX_BINS_PER_INTERVAL = 1_000
 
 #: ``interval_overlap_join(strategy="auto")`` broadcasts the right side at
-#: or below this many rows. Measured crossover (`ab_round10_ops.py
-#: interval`, 500k session-shaped left intervals): at 500k x 1k the NLJ
+#: or below this many rows. Measured crossover (SCALE_NOTES r10 interval
+#: A/B, 500k session-shaped left intervals; re-measure with tools/ab.py): at 500k x 1k the NLJ
 #: wins (0.39 s vs 0.50 s — no explode, no shuffle); by 500k x 5k the
 #: binned plan is 1.6x faster and 3.3x at 20k — LOWER than the grid
 #: join's 8k crossover because each broadcast right row is probed against

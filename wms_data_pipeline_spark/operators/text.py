@@ -74,7 +74,7 @@ def stopword_count(colname: str, stopwords: tuple[str, ...]) -> Column:
     Counts are identical to the former higher-order
     ``filter(tokens, t -> array_contains(...))`` form, which evaluated its
     lambda interpretively per token outside codegen (the HOF lesson from
-    the minhash/LSH kernels — A/B'd in tools/ab_curation.py)."""
+    the minhash/LSH kernels — SCALE_NOTES r4; A/B with tools/ab.py)."""
     alt = "|".join(stopwords)
     return F.regexp_count(
         F.concat(F.lit(" "), F.col(colname), F.lit(" ")),
@@ -94,7 +94,8 @@ def quality_features(df: DataFrame, colname: str = "text") -> DataFrame:
     no intermediate replaced strings, token arrays, or interpreted HOF
     lambdas. Counts (and therefore score bits) are identical to the
     tokenize/replace formulation the DuckDB oracle uses; the fused form
-    measured 0.72→0.60 s on the curation headliner (tools/ab_curation.py).
+    measured 0.72→0.60 s on the curation headliner (SCALE_NOTES r5;
+    re-measure with tools/ab.py).
     """
     n_chars = F.length(F.col(colname))
     n_tok = F.regexp_count(F.col(colname), F.lit(r"\S+"))
@@ -179,7 +180,8 @@ def bigram_lm_score(
 
     Returns (id, n_bigrams, lm_score) — documents with <2 tokens drop out.
 
-    Plan shape (rebuilt round 11 — `ab_round11_ops.py bigram`, 1.54x at
+    Plan shape (rebuilt round 11 — SCALE_NOTES r11 bigram A/B, re-measure
+    with tools/ab.py; 1.54x at
     sf0.1, static exchanges 6 -> 3 (+1 in the materialization job)): the
     aggregated bigram table ``c(h,w)`` is materialized ONCE via
     ``localCheckpoint`` — the "bigram relation persists once instead of
@@ -250,8 +252,8 @@ def curation_pipeline_full(
 ) -> DataFrame:
     """The end-to-end curation dataflow as ONE composed plan — the
     nightly job a 100 TB training-data run executes (registry twin:
-    ``txt_curation_pipeline_full``; scale measurement:
-    ``tools/ab_curation_pipeline.py``). Stages, in order: quality filter
+    ``txt_curation_pipeline_full``; scale measurement: SCALE_NOTES r7
+    "Composed curation pipeline at scale"; A/B with tools/ab.py). Stages, in order: quality filter
     (absolute cutoff) → exact dedup (keep-min-id per sha256) → MinHash
     near-dup keep (drop id_b per verified pair) → train/test
     decontamination (b=0 hash bucket held out; drop train docs sharing
@@ -641,8 +643,8 @@ def bpe_train(
 MAX_CLASSIFIER_VOCAB = 2_000_000
 
 #: Measured closure-vs-join crossover for DataFrame vocabularies
-#: (tools/ab_classifier_join.py, sf0.1 docs tiled 16x / 80k docs,
-#: SCALE_NOTES r13): the join's cost is nearly FLAT in vocabulary size
+#: (SCALE_NOTES r13, sf0.1 docs tiled 16x / 80k docs; re-measure with
+#: tools/ab.py): the join's cost is nearly FLAT in vocabulary size
 #: (~1.5 s at 50k -> ~2.4 s at 2M — AQE broadcasts or shuffles a JVM
 #: table) while the closure's grows linearly with the dict it collects,
 #: pickles and ships per task (0.7 s at 50k -> 13 s at 2M); they cross
@@ -841,7 +843,7 @@ def classifier_score(
     ``MAX_CLASSIFIER_VOCAB`` cap) evaluated as an Arrow pandas UDF
     holding the table in the task closure. Measured fastest by 3.3x
     over this fold and 20x over explode + broadcast-join + re-agg
-    (`ab_round10_ops.py classifier`, SCALE_NOTES r10): zero shuffles,
+    (SCALE_NOTES r10; A/B with tools/ab.py): zero shuffles,
     C-speed dict lookups, ~46k docs/s on 32 local cores; the join form
     materializes a per-token row stream and pays a shuffle, and the
     md5 fold is crypto-hash-bound rather than transfer-bound. Unseen

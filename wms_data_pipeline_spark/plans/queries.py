@@ -1953,7 +1953,8 @@ def txt_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # row_number window: min(struct(doc_id,…)) partial-aggregates map-side
     # (doc_id leads the struct and is unique, so the winner is the window's
     # rn=1 row exactly); the window form ships every row to its
-    # fingerprint's reducer and sorts there — A/B'd in tools/ab_curation.py
+    # fingerprint's reducer and sorts there — SCALE_NOTES r5 curation A/B;
+    # re-measure with tools/ab.py
     curated = fp.groupBy("fingerprint").agg(
         F.min(F.struct("doc_id", "lang", "n_tokens")).alias("__w")
     )
@@ -2256,7 +2257,7 @@ def txt_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     "head totals are a window sum on the same head partitioning; the "
     "scoring join co-partitions on the head subset of its key — 6 -> 3 "
     "static exchanges (+1 materialization), 1.54x at sf0.1 "
-    "(ab_round11_ops.py bigram, SCALE_NOTES r11). Never doc x doc; k=0.5 "
+    "(SCALE_NOTES r11 bigram A/B; tools/ab.py). Never doc x doc; k=0.5 "
     "is exact in binary so the smoothed ratio is bit-identical across "
     "engines (operators/text.py bigram_lm_score).",
 )
@@ -5051,7 +5052,8 @@ def evt_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     "other direction - drop from the train split every document sharing "
     ">=3 distinct word 4-grams with the held-out split, and return the "
     "surviving train set. Same deterministic hash split; rebuilt r11 "
-    "(ab_round11_ops.py decon, 6 -> 4 exchanges, 1.76x at sf0.1): the "
+    "(SCALE_NOTES r11 decon A/B, tools/ab.py; 6 -> 4 exchanges, 1.76x at "
+    "sf0.1): the "
     "overlap probe is a SEMI join against the raw test shingle stream — "
     "semi never duplicates, so the test side needs no distinct "
     "aggregate, and shingles_of is already distinct per doc, so "

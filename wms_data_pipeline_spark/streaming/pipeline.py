@@ -56,8 +56,16 @@ def _pin(held: list, df: DataFrame) -> DataFrame:
     r14 bench contamination bug: a 120-batch soak left ~60 orphaned
     checkpoint RDDs pinned in the block manager (localCheckpoint blocks
     can spill but never evict, because their lineage is truncated).
-    ``persist`` keeps the same reuse semantics with an UNPERSIST that
-    actually releases, and an evictable storage level as the backstop."""
+    ``persist`` has an UNPERSIST that actually releases, but it is NOT the
+    same semantics: its blocks are evictable and are lost with an
+    executor, and a lost block is recomputed by replaying the frame's
+    lineage back to the micro-batch source. That is correct only because
+    the batch is replayable — a file/offset-based source re-reads the same
+    rows for the same batch, and every transform between source and pin
+    is deterministic. A frame built from a non-replayable input or a
+    nondeterministic expression (``rand``, ``current_timestamp``) could
+    recompute to different rows in a later consumer; it needs an eager
+    ``localCheckpoint`` instead."""
     df = df.persist()
     held.append(df)
     return df
