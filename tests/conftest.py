@@ -1,4 +1,5 @@
 import tempfile
+import uuid
 
 import pytest
 
@@ -14,3 +15,21 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def jobs_of(spark):
+    """``jobs_of(fn)`` -> (``fn()``, ids of the Spark jobs it submitted),
+    counted through a job group of its own."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs-of-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

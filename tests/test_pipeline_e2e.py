@@ -1,6 +1,9 @@
 """End-to-end incremental runs: extractor → landing → staging → warehouse,
 including rerun idempotence, late-data lookback, and CDC updates."""
 
+from datetime import datetime, timezone
+
+import pytest
 from pyspark.sql import functions as F
 
 from wms_data_pipeline_spark.operators.merge import ParquetTable
@@ -577,3 +580,163 @@ def test_composed_stream_crash_replay_bit_equal(spark, tmp_path):
     for k in ("history", "latest", "audit", "pairs", "totals", "shingles",
               "matrix_keys"):
         assert s_post[k] == s_clean[k], f"post_all sink diverged: {k}"
+
+
+#: Jobs of one ``_extract_entity`` on a small declared-schema batch: the
+#: landing write's query stages and nothing else. The watermark is driver
+#: file I/O, and the batch's max(updated_at) and row count are observed on
+#: the write instead of being two more actions over the batch.
+EXTRACT_JOBS = 4
+
+
+def test_extract_entity_counts_from_its_landing_write(spark, tmp_path, jobs_of):
+    import wms_data_pipeline_spark.pipeline as pl
+    from wms_data_pipeline_spark.control.watermark import WatermarkStore
+    from wms_data_pipeline_spark.sources.landing import read_landing
+
+    landing = str(tmp_path / "landing")
+    ws = WatermarkStore(spark, str(tmp_path / "control" / "etl_watermark"))
+    sim = CdcSimulator("ib_receipts", n_seed=9, seed=21)
+    api = SchemaApi(sim)
+
+    def extract(run_id):
+        return jobs_of(lambda: pl._extract_entity(
+            spark, "http://f", "ib_receipts", landing, ws, "p", 0, 100, api,
+            "parquet", run_id, datetime.now(timezone.utc),
+        ))
+
+    ex1, jobs1 = extract("r1")
+    top = max(datetime.fromisoformat(r["updated_at"]) for r in sim.rows)
+    assert ex1.rows == 9 and ex1.new_watermark == top == ws.get("p", "ib_receipts")
+    assert len(jobs1) == EXTRACT_JOBS
+    # zero-row extract (strict > on the watermark, no lookback): the empty
+    # batch is still landed and the watermark is carried forward
+    ex2, jobs2 = extract("r2")
+    assert ex2.rows == 0 and len(jobs2) == EXTRACT_JOBS
+    assert ex2.landing_path is not None
+    assert read_landing(spark, landing, "ib_receipts", "r2").count() == 0
+    assert ex2.new_watermark == top == ws.get("p", "ib_receipts")
+
+
+class _Crash(BaseException):
+    """A process death at an injected point: no ``except Exception`` in the
+    pipeline or its retry loop sees it, so nothing after it runs."""
+
+
+class _RenameCrashes:
+    """A Hadoop FileSystem whose ``rename`` dies; everything else passes."""
+
+    def __init__(self, fs):
+        self._fs = fs
+
+    def rename(self, src, dst):
+        raise _Crash(f"crashed before renaming onto {dst}")
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+
+#: Control writes of one cycle -> (TableFS call, root it writes under).
+CONTROL_WRITES = {
+    "watermark.upsert": ("write_text_atomic", "/etl_watermark/"),
+    "runlog.start": ("create_exclusive", "/pipeline_run_log/"),
+    "runlog.finish_success": ("write_text_atomic", "/pipeline_run_log/"),
+}
+
+
+def _crash_at_next(monkeypatch, point):
+    """Kill the next control write of ``point`` midway: a tmp-then-rename
+    write dies with its tmp file written and the rename not done; a
+    create-exclusive dies with the name claimed and no content in it."""
+    from wms_data_pipeline_spark import fsio
+
+    method, under = CONTROL_WRITES[point]
+    real = getattr(fsio.TableFS, method)
+    armed = [True]
+
+    def crashing(self, path, text):
+        if not (armed[0] and under in path):
+            return real(self, path, text)
+        armed[0] = False
+        if method == "create_exclusive":
+            real(self, path, "")
+            raise _Crash(f"crashed inside the claim of {path}")
+        fs, self._fs = self._fs, _RenameCrashes(self._fs)
+        try:
+            return real(self, path, text)
+        finally:
+            self._fs = fs
+
+    monkeypatch.setattr(fsio.TableFS, method, crashing)
+
+
+@pytest.mark.parametrize("point", sorted(CONTROL_WRITES))
+def test_control_write_crash_reruns_converge(spark, tmp_path, monkeypatch, point):
+    """A cycle killed inside one of its control writes leaves the previous
+    watermark and run state visible. Rerunning it (same run_id, then a new
+    one) converges: the warehouse matches the source, the watermark is
+    monotone and never past the landed rows, and each run has exactly one
+    run-log row, terminal."""
+    from types import SimpleNamespace
+
+    import wms_data_pipeline_spark.pipeline as pl
+    from wms_data_pipeline_spark.control.runlog import RunLog
+    from wms_data_pipeline_spark.control.watermark import WatermarkStore
+    from wms_data_pipeline_spark.sources.landing import read_landing_all_runs
+
+    landing, control, wh = (str(tmp_path / d) for d in ("landing", "control", "wh"))
+    sim = CdcSimulator("ib_receipts", n_seed=6, seed=17)
+    run_id = ["seed"]
+    monkeypatch.setattr(pl, "uuid", SimpleNamespace(uuid4=lambda: SimpleNamespace(hex=run_id[0])))
+
+    def cycle(rid):
+        run_id[0] = rid
+        (ex, st), = pl.orchestrated_run(
+            spark, "http://fake", landing, control, wh, entities=["ib_receipts"],
+            getter=MultiEntityApi({"ib_receipts": sim}), limit=10, lookback_seconds=0,
+        )
+        assert st.status == "success"
+
+    def wm():
+        return WatermarkStore(spark, f"{control}/etl_watermark").get("wms_extract", "ib_receipts")
+
+    def runs():
+        view = RunLog(spark, f"{wh}/pipeline_run_log").table.read()
+        rows = view.collect() if view is not None else []
+        assert len(rows) == len({r["run_id"] for r in rows})
+        return {r["run_id"]: r["status"] for r in rows}
+
+    cycle("seed")
+    wm0 = wm()
+    sim.tick(3)
+    _crash_at_next(monkeypatch, point)
+    with pytest.raises(_Crash):
+        cycle("crashed")
+    # the killed write never happened: a killed upsert leaves the previous
+    # watermark (a run-log write comes after the extract advanced it), a
+    # killed start leaves no row, a killed finish leaves the run "running"
+    if point == "watermark.upsert":
+        assert wm() == wm0
+    else:
+        assert wm() > wm0
+    if point == "runlog.finish_success":
+        assert runs() == {"seed": "success", "crashed": "running"}
+    else:
+        assert runs() == {"seed": "success"}
+
+    cycle("crashed")
+    wm1 = wm()
+    sim.tick(2)
+    cycle("after")
+    wm2 = wm()
+
+    latest = ParquetTable(spark, f"{wh}/stg_ib_receipts").read()
+    assert {r["id"]: r["status"] for r in latest.collect()} == {r["id"]: r["status"] for r in sim.rows}
+    hist = ParquetTable(spark, f"{wh}/stg_ib_receipts_history").read()
+    assert hist.count() == hist.dropDuplicates(["id", "updated_at", "payload_hash"]).count()
+    assert hist.count() == 6 + 3 + 2
+    landed_max = read_landing_all_runs(spark, landing, "ib_receipts").agg(F.max("updated_at")).first()[0]
+    top = max(datetime.fromisoformat(r["updated_at"]) for r in sim.rows)
+    assert wm0 < wm1 <= wm2 == top
+    assert wm2 <= landed_max.replace(tzinfo=timezone.utc)
+    assert runs() == {"seed": "success", "crashed": "success", "after": "success"}

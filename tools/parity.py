@@ -13,7 +13,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 import duckdb
 
@@ -124,18 +125,20 @@ def main() -> int:
     return 1 if failures else 0
 
 
-def _record_results(checked: list[str], failures: list[str], sf_dir: str) -> None:
-    """Persist per-name pass/fail to PARITY_LAST.json (repo root).
+def _record_results(
+    checked: list[str], failures: list[str], sf_dir: str, root: str = REPO_ROOT
+) -> None:
+    """Persist per-name pass/fail to ``<root>/PARITY_LAST.json``.
 
     __spark_entry__'s rotation subtracts last-run parity failures from the
     driver-verified set, so a query that re-breaks on new testdata rotates
     back INTO the driver's 50-entry verification window instead of hiding
     behind a stale green row (round-3 verdict ask #7). Partial runs update
-    only the names they checked."""
+    only the names they checked, and ``checked`` records, per name, the
+    scale and time of the run its result comes from."""
     import glob
     import re
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     path = os.path.join(root, "PARITY_LAST.json")
     rounds = [
         int(m.group(1))
@@ -148,11 +151,18 @@ def _record_results(checked: list[str], failures: list[str], sf_dir: str) -> Non
             state = json.load(f)
     except Exception:
         state = {"results": {}}
+    # a single run-wide stamp (older files) cannot say which scale each
+    # cumulative result came from
+    state.pop("sf_dir", None)
+    state.pop("checked_at", None)
     results = state.setdefault("results", {})
     fail_rounds = state.setdefault("last_fail_round", {})
+    stamps = state.setdefault("checked", {})
+    now = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
     bad = set(failures)
     for name in checked:
         results[name] = "fail" if name in bad else "pass"
+        stamps[name] = {"sf_dir": sf_dir, "checked_at": now}
         if name in bad:
             # Sticky: a failure observed while round N is the latest
             # CORRECTNESS file invalidates every driver green up to and
@@ -161,8 +171,6 @@ def _record_results(checked: list[str], failures: list[str], sf_dir: str) -> Non
             # does NOT clear it: local parity and driver certification are
             # different gates, and the driver must re-certify.
             fail_rounds[name] = max(cur_round, fail_rounds.get(name, 0))
-    state["sf_dir"] = sf_dir
-    state["checked_at"] = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
     with open(path, "w") as f:
         json.dump(state, f, indent=1, sort_keys=True)
     _sync_scale_notes(root, state)
@@ -172,20 +180,37 @@ def _sync_scale_notes(root: str, state: dict) -> None:
     """Rewrite the generated parity-state blocks in SCALE_NOTES.md and
     COVERAGE.md from the artifact just written — self-reported counts are
     generated, never typed (VERDICT r4 ask #8: a hand-typed 127/127
-    outlived a 128-query registry)."""
+    outlived a 128-query registry). Counts are given per scale, the scale
+    each name was last checked at."""
     begin = "<!-- generated:parity (written by tools/parity.py — do not edit) -->"
     end = "<!-- /generated:parity -->"
     results = state.get("results", {})
+    stamps = state.get("checked", {})
     n_pass = sum(1 for v in results.values() if v == "pass")
     n_oracled = sum(1 for s in REGISTRY.values() if s.oracle is not None)
+    # sf_dir (None: not recorded) -> [names, passes, last checked_at]
+    by_scale: dict = {}
+    for name, res in results.items():
+        stamp = stamps.get(name, {})
+        agg = by_scale.setdefault(stamp.get("sf_dir"), [0, 0, ""])
+        agg[0] += 1
+        agg[1] += res == "pass"
+        agg[2] = max(agg[2], stamp.get("checked_at", ""))
+    lines = [
+        f"- `{sf}`: {p}/{n} pass, last checked {last}"
+        if sf is not None else f"- scale not recorded: {p}/{n} pass"
+        for sf, (n, p, last) in sorted(
+            by_scale.items(), key=lambda kv: (kv[0] is None, kv[0] or "")
+        )
+    ]
     block = (
         f"{begin}\n"
         f"**Parity state** (cumulative, per-name latest result; artifact:\n"
         f"`PARITY_LAST.json`): **{n_pass}/{len(results)} pass** of a\n"
-        f"**{len(REGISTRY)}-query registry** ({n_oracled} oracle-paired);\n"
-        f"last run {state['checked_at']}\n"
-        f"at `{state['sf_dir']}`.\n"
-        f"{end}"
+        f"**{len(REGISTRY)}-query registry** ({n_oracled} oracle-paired),\n"
+        f"by the scale each name was last checked at:\n"
+        + "\n".join(lines)
+        + f"\n{end}"
     )
     for fname in ("SCALE_NOTES.md", "COVERAGE.md"):
         doc = os.path.join(root, fname)

@@ -1,1 +1,2 @@
-"""Control plane — watermark + run-log tables (small, parquet-backed)."""
+"""Control plane — watermark and run-log documents written by the driver
+(``docs.DocTable``), and the parquet-backed quality-audit table."""

@@ -7,17 +7,23 @@ rows_upserted_latest, error)``; start is INSERT ON CONFLICT DO NOTHING;
 error text truncated to 4000 chars. The reference's double-finish quirk on
 empty batches (staging run.py:54-86 falls through after the early success)
 is intentionally NOT reproduced — one terminal state per run.
+
+Each run is one driver-written JSON document (``control.docs.DocTable``),
+with no Spark job: ``start`` is a create-exclusive, and losing it is the
+ON CONFLICT DO NOTHING; ``finish_*`` overlays only the columns it sets and
+rewrites the document atomically, so an error text survives a
+failed-then-successful retry exactly as an UPDATE of the row would keep
+it. ``table.read()`` is the table view, one row per run.
 """
 
 from __future__ import annotations
 
 from datetime import datetime, timezone
 
-from pyspark.sql import Row, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 from pyspark.sql.types import LongType, StringType, StructField, StructType, TimestampType
 
-from wms_data_pipeline_spark.operators.merge import ParquetTable
+from wms_data_pipeline_spark.control.docs import DocTable
 
 ERROR_TEXT_CAP = 4000  # reference pipeline_run_logs_repo.py:70
 
@@ -44,39 +50,24 @@ def _now() -> datetime:
 class RunLog:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
-        self.table = ParquetTable(spark, root)
-
-    def _row(self, **kw) -> Row:
-        base = dict(
-            run_id=None, pipeline_name=None, entity=None, started_at=None,
-            ended_at=None, status=None, rows_in=None, rows_inserted_history=None,
-            rows_upserted_latest=None, error=None,
-        )
-        base.update(kw)
-        return Row(**base)
+        self.table = DocTable(spark, root, RUNLOG_SCHEMA, ("run_id",))
 
     def start(self, run_id: str, pipeline_name: str, entity: str) -> None:
         """INSERT … ON CONFLICT DO NOTHING — a restarted run keeps its
         original start row (reference pipeline_run_logs_repo.py:7-24)."""
-        existing = self.table.read()
-        if existing is not None and existing.filter(F.col("run_id") == run_id).limit(1).count():
-            return
-        row = self.spark.createDataFrame(
-            [self._row(run_id=run_id, pipeline_name=pipeline_name, entity=entity,
-                       started_at=_now(), status="running")],
-            RUNLOG_SCHEMA,
-        )
-        self.table._publish(row if existing is None else existing.unionByName(row))
+        doc = dict.fromkeys(RUNLOG_SCHEMA.names)
+        doc.update(run_id=run_id, pipeline_name=pipeline_name, entity=entity,
+                   started_at=_now(), status="running")
+        if not self.table.insert(doc) and self.table.get(run_id) is None:
+            # a start that crashed inside its claim left an empty document
+            self.table.put(doc)
 
     def _finish(self, run_id: str, **updates) -> None:
-        existing = self.table.read()
-        if existing is None:
+        doc = self.table.get(run_id)
+        if doc is None:
             raise ValueError(f"run {run_id} was never started")
-        target = existing.filter(F.col("run_id") == run_id)
-        others = existing.filter(F.col("run_id") != run_id)
-        for c, v in updates.items():
-            target = target.withColumn(c, F.lit(v).cast(RUNLOG_SCHEMA[c].dataType))
-        self.table._publish(others.unionByName(target))
+        doc.update(updates)
+        self.table.put(doc)
 
     def finish_success(
         self, run_id: str, rows_in: int, rows_inserted_history: int, rows_upserted_latest: int

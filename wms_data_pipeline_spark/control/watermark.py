@@ -7,9 +7,11 @@ default start; writes are monotonic via GREATEST(existing, new) but the
 run_id is ALWAYS overwritten, even by a stale run (pinned by
 test_watermark_repo.py:48-65).
 
-A watermark table is tiny (one row per pipeline×entity) — it lives as a
-ParquetTable and every operation is a broadcast-sized job. In pure
-Structured Streaming the checkpoint subsumes this; the explicit table is the
+Each (pipeline_name, entity) row is one driver-written JSON document
+(``control.docs.DocTable``): ``get`` is one committed small-file read and
+``upsert`` one read plus one tmp-write-and-rename, with no Spark job. A
+crash before the rename leaves the previous watermark. In pure Structured
+Streaming the checkpoint subsumes this; the explicit store is the
 batch-incremental mode's source of truth.
 """
 
@@ -17,11 +19,10 @@ from __future__ import annotations
 
 from datetime import datetime, timezone
 
-from pyspark.sql import Row, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
-from wms_data_pipeline_spark.operators.merge import ParquetTable
+from wms_data_pipeline_spark.control.docs import DocTable, utc
 
 DEFAULT_TIME_START = "1970-01-01T00:00:00+00:00"  # reference config.py:48
 
@@ -36,14 +37,10 @@ WATERMARK_SCHEMA = StructType(
 )
 
 
-def _utc(ts: datetime) -> datetime:
-    return ts.replace(tzinfo=timezone.utc) if ts.tzinfo is None else ts.astimezone(timezone.utc)
-
-
 class WatermarkStore:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
-        self.table = ParquetTable(spark, root)
+        self.table = DocTable(spark, root, WATERMARK_SCHEMA, ("pipeline_name", "entity"))
 
     def get(
         self,
@@ -53,17 +50,9 @@ class WatermarkStore:
     ) -> datetime:
         """Op 22: saved watermark or the configured default ISO start
         (reference watermark_repo.py:18-38)."""
-        df = self.table.read()
-        if df is not None:
-            rows = (
-                df.filter(
-                    (F.col("pipeline_name") == pipeline_name) & (F.col("entity") == entity)
-                )
-                .select("last_success_time")
-                .collect()
-            )
-            if rows:
-                return _utc(rows[0][0])
+        doc = self.table.get(pipeline_name, entity)
+        if doc is not None:
+            return doc["last_success_time"]
         return datetime.fromisoformat(default_time_start)
 
     def upsert(
@@ -78,31 +67,17 @@ class WatermarkStore:
         GREATEST(existing, new)`` (never backwards, reference
         watermark_repo.py:53); ``run_id`` and ``updated_at`` always
         overwritten, even when the time is kept."""
-        now = _utc(now or datetime.now(timezone.utc))
-        incoming = self.spark.createDataFrame(
-            [Row(pipeline_name=pipeline_name, entity=entity,
-                 last_success_time=_utc(new_wm), last_success_run_id=run_id,
-                 updated_at=now)],
-            WATERMARK_SCHEMA,
-        )
-        existing = self.table.read()
-        if existing is None:
-            self.table._publish(incoming)
-            return
-        key = ["pipeline_name", "entity"]
-        old = existing.select(
-            *key, F.col("last_success_time").alias("__old_time")
-        )
-        merged_new = (
-            incoming.join(old, on=key, how="left")
-            .withColumn(
-                "last_success_time",
-                F.greatest(F.col("last_success_time"), F.col("__old_time")),
+        wm = utc(new_wm)
+        old = self.table.get(pipeline_name, entity)
+        if old is not None:
+            wm = max(wm, old["last_success_time"])
+        self.table.put(
+            dict(
+                pipeline_name=pipeline_name, entity=entity, last_success_time=wm,
+                last_success_run_id=run_id,
+                updated_at=utc(now or datetime.now(timezone.utc)),
             )
-            .drop("__old_time")
         )
-        untouched = existing.join(incoming.select(*key), on=key, how="left_anti")
-        self.table._publish(untouched.unionByName(merged_new))
 
 
 def compute_new_watermark(batch_max_ts: datetime | None, saved: datetime) -> datetime:
@@ -110,4 +85,4 @@ def compute_new_watermark(batch_max_ts: datetime | None, saved: datetime) -> dat
     the batch is empty (reference run.py:72-75)."""
     if batch_max_ts is None:
         return saved
-    return max(_utc(batch_max_ts), _utc(saved))
+    return max(utc(batch_max_ts), utc(saved))

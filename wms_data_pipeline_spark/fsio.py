@@ -2,8 +2,9 @@
 
 ``ParquetTable`` keeps its commit record in a tiny ``_VERSION`` pointer
 file next to the data — the one pointer protocol of every parquet sink
-(``PartitionedMergeTable`` is a ParquetTable per bucket directory, the
-control tables wrap one). The DATA side
+(``PartitionedMergeTable`` is a ParquetTable per bucket directory). The
+watermark and run-log documents (``control.docs``) are small files of the
+same kind, so the control plane runs no Spark job at all. The DATA side
 (``spark.read/write.parquet``) was always scheme-agnostic, but the pointer
 was driver-local ``open()``/``os.replace`` — meaning the warehouse root had
 to live on the driver's local disk. On a real cluster the control plane
@@ -34,6 +35,7 @@ upgrades to create-exclusive commit markers, see below):
   missing one (then the ``.old`` fallback). Multi-writer or strict-reader
   deployments should graduate to Delta/Iceberg optimistic commit (SURVEY
   §7.3 hard part 3) — exactly the caveat those formats exist to solve.
+  Control documents are written the same way (``write_text_atomic``).
 
 CREATE-EXCLUSIVE (``create_exclusive``), the optimistic-concurrency
 primitive behind ``concurrent_writers=True`` commit markers:
@@ -60,10 +62,11 @@ primitive behind ``concurrent_writers=True`` commit markers:
   Hadoop conf. WITHOUT either signal the old check-then-put behavior
   cannot claim exclusively, so ``create_exclusive`` REFUSES s3-family
   roots loudly — single-writer-only, graduate to Delta/Iceberg (the
-  pre-r14 docstring caveat, now enforced in code).
+  pre-r14 docstring caveat, now enforced in code). ``RunLog.start`` claims
+  its run document this way, so a run log on such a root refuses too.
 
-Each call is one py4j round-trip; fine for control-plane files, never used
-on the data path.
+Each call is one py4j round-trip (a few ms): fine for control-plane files,
+never used on the data path.
 """
 
 from __future__ import annotations

@@ -17,9 +17,11 @@ Two layers here:
    publish + MERGE on plain parquet, keeping the engine dependency-free.
    It holds the ONE pointer protocol (``v=<n>/`` + ``_VERSION``, or commit
    markers under ``concurrent_writers``), crash guards and retention of
-   every parquet sink: the control tables wrap it, and
-   ``merge_partitioned.PartitionedMergeTable`` is one ParquetTable per
-   bucket. On a real lake this is a Delta/Iceberg MERGE
+   every parquet sink: ``merge_partitioned.PartitionedMergeTable`` is one
+   ParquetTable per bucket, and the quality-audit table wraps one. The
+   watermark and run log are not ParquetTables: a read-merge-rewrite of a
+   one-row table costs Spark jobs every cycle, so they are driver-written
+   documents (``control.docs``). On a real lake this is a Delta/Iceberg MERGE
    (``whenNotMatchedInsertAll`` / ``whenMatchedUpdateAll(condition=…)``)
    behind the same function signatures.
 
@@ -35,7 +37,7 @@ keep-max over (existing ∪ batch). For 100 TB latest-state tables the real
 deployment partitions the table by a stable bucket of ``id`` so the merge
 rewrites only touched partitions — with Delta/Iceberg that's MERGE + dynamic
 partition/file pruning; the pure-parquet fallback here rewrites the table and
-is meant for control/latest tables that are orders of magnitude smaller than
+is meant for latest tables that are orders of magnitude smaller than
 the fact history.
 """
 
@@ -56,7 +58,7 @@ HISTORY_KEY: tuple[str, ...] = ("id", "updated_at", "payload_hash")  # init_dw.s
 LATEST_KEY: str = "id"  # init_dw.sql:42-50
 
 # ``ParquetTable._publish`` base for callers that do not track the version
-# their rows were built from (the single-writer control tables)
+# their rows were built from (a single-writer rollup table)
 _UNCHECKED = object()
 
 
@@ -217,9 +219,9 @@ class ParquetTable:
 
     CLUSTER STORAGE (r12): all pointer/stale-dir I/O goes through the
     Hadoop FileSystem API (``fsio.TableFS``), so the warehouse root — and
-    with it every ParquetTable-backed component: history/latest sinks,
-    ``WatermarkStore``, ``RunLog``, ``QualityAuditLog`` — can live on any
-    scheme Spark reads (``file://``, ``hdfs://``, ``s3a://``). Pointer-flip
+    with it every ParquetTable-backed component: history/latest sinks and
+    ``QualityAuditLog``, as well as the ``WatermarkStore``/``RunLog``
+    documents — can live on any scheme Spark reads (``file://``, ``hdfs://``, ``s3a://``). Pointer-flip
     atomicity per scheme is documented in ``fsio``; on S3 the flip is
     copy+delete (non-atomic for concurrent readers — graduate to
     Delta/Iceberg for that).

@@ -19,7 +19,8 @@ from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
@@ -36,7 +37,11 @@ from wms_data_pipeline_spark.operators.merge import ParquetTable
 from wms_data_pipeline_spark.operators.normalize import normalize
 from wms_data_pipeline_spark.operators.payload import with_payload_and_hash
 from wms_data_pipeline_spark.schemas import ENTITY_RAW_SCHEMAS
-from wms_data_pipeline_spark.sources.landing import read_landing, write_landing
+from wms_data_pipeline_spark.sources.landing import (
+    landing_path,
+    read_landing,
+    write_landing,
+)
 from wms_data_pipeline_spark.sources.rest import fetch_all
 
 
@@ -128,8 +133,9 @@ def _extract_entity(
 ) -> ExtractResult:
     """One entity's extract task: watermark − lookback → fetch → normalize →
     landing → watermark GREATEST-merge. Idempotent under retry: landing is
-    keyed by (entity, run_id) and the watermark merge is monotonic, so a
-    re-attempt after a mid-task crash re-fetches and overwrites cleanly."""
+    keyed by (entity, run_id) and written once, and the watermark merge is
+    monotonic, so a re-attempt after a crash past the landing write moves
+    the watermark from the batch already landed."""
     saved = wm_store.get(pipeline_name, entity)
     wm_eff = effective_watermark(saved, lookback_seconds)
     kwargs = {"getter": getter} if getter is not None else {}
@@ -151,11 +157,28 @@ def _extract_entity(
         wm_store.upsert(pipeline_name, entity, saved, run_id)
         return ExtractResult(entity, run_id, 0, None, saved)
     batch = normalize(raw, run_id, extracted_at, wm_eff)
-    path = write_landing(batch, landing_root, entity, run_id, output_format)
-    max_ts = batch.agg(F.max("updated_at")).collect()[0][0]
+    # the watermark and the row count are metrics of the landing write
+    # itself, not two more actions over the batch
+    obs = Observation()
+    counted = batch.observe(
+        obs, F.max("updated_at").alias("max_ts"), F.count(F.lit(1)).alias("rows")
+    )
+    try:
+        path = write_landing(counted, landing_root, entity, run_id, output_format)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_ALREADY_EXISTS":
+            raise
+        # an earlier attempt of this run landed its batch and crashed later:
+        # that landed batch is what staging merges, so the watermark moves
+        # from it, never from the re-fetch
+        path = landing_path(landing_root, entity, run_id)
+        landed = read_landing(spark, landing_root, entity, run_id)
+        max_ts, n = landed.agg(F.max("updated_at"), F.count(F.lit(1))).first()
+    else:
+        max_ts, n = obs.get["max_ts"], obs.get["rows"]
     new_wm = compute_new_watermark(max_ts, saved)
     wm_store.upsert(pipeline_name, entity, new_wm, run_id)
-    return ExtractResult(entity, run_id, batch.count(), path, new_wm)
+    return ExtractResult(entity, run_id, n, path, new_wm)
 
 
 @dataclass
@@ -324,9 +347,8 @@ def scheduled_runs(
     watermark, but a tick with no upstream changes is NOT a no-op: the
     extractor re-reads the ``lookback_seconds`` window (120 s by default)
     behind the watermark and re-stages it through both merges, so it costs
-    nearly as much as a small tick (``perfbench/NOTES.md``, 3,000-row
-    ``elt_reference`` on 4 cores: 5.3 s median against 6.4 s for a 200-row
-    tick).
+    most of a small tick (``perfbench`` ``elt_reference``, 3,000 rows on 4
+    cores, medians of 10 runs: 2.5 s against 3.4 s for a 200-row tick).
     """
     runs = 0
     while max_runs is None or runs < max_runs:

@@ -273,7 +273,7 @@ class JdbcWatermarkStore:
     """Watermark control table on a JDBC warehouse — the reference's actual
     deployment shape (etl_watermark lives in the warehouse,
     watermark_repo.py:18-63), with the same API and invariants as the
-    ParquetTable-backed ``WatermarkStore``: reads fall back to the default
+    document-backed ``WatermarkStore``: reads fall back to the default
     start; ``last_success_time`` is GREATEST-monotonic; ``run_id`` and
     ``updated_at`` are ALWAYS overwritten, even by a stale run (pinned by
     reference test_watermark_repo.py:48-65)."""
@@ -301,10 +301,8 @@ class JdbcWatermarkStore:
     ):
         from datetime import datetime
 
-        from wms_data_pipeline_spark.control.watermark import (
-            DEFAULT_TIME_START,
-            _utc,
-        )
+        from wms_data_pipeline_spark.control.docs import utc
+        from wms_data_pipeline_spark.control.watermark import DEFAULT_TIME_START
 
         df = self.sink.read()
         if df is not None:
@@ -317,7 +315,7 @@ class JdbcWatermarkStore:
                 .collect()
             )
             if rows:
-                return _utc(rows[0][0])
+                return utc(rows[0][0])
         return datetime.fromisoformat(default_time_start or DEFAULT_TIME_START)
 
     def upsert(
@@ -332,15 +330,15 @@ class JdbcWatermarkStore:
 
         from pyspark.sql import Row
 
-        from wms_data_pipeline_spark.control.watermark import _utc
+        from wms_data_pipeline_spark.control.docs import utc
 
-        now = _utc(now or datetime.now(timezone.utc))
+        now = utc(now or datetime.now(timezone.utc))
         incoming = self.spark.createDataFrame(
             [
                 Row(
                     pipeline_name=pipeline_name,
                     entity=entity,
-                    last_success_time=_utc(new_wm),
+                    last_success_time=utc(new_wm),
                     last_success_run_id=run_id,
                     updated_at=now,
                 )
