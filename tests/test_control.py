@@ -128,6 +128,11 @@ def test_legacy_parquet_control_roots_migrate_once(spark, tmp_path, jobs_of):
         RUNLOG_SCHEMA,
     ))
 
+    for root in (wm_root, rl_root):
+        os.makedirs(os.path.join(root, "keep"))
+        with open(os.path.join(root, "notes.txt"), "w") as f:
+            f.write("not a control document")
+
     ws = WatermarkStore(spark, wm_root)
     assert ws.get("p", "e1") == T_NEW and ws.get("p", "e2") == T_OLD
     assert ws.get("p", "e3") == datetime(1970, 1, 1, tzinfo=timezone.utc)
@@ -139,9 +144,10 @@ def test_legacy_parquet_control_roots_migrate_once(spark, tmp_path, jobs_of):
     (r,) = rl.table.read().collect()
     assert (r["status"], r["rows_in"], r["rows_upserted_latest"]) == ("success", 10, 5)
     assert r["started_at"] == T_OLD.replace(tzinfo=None)
-    # the legacy layout is gone: nothing reads it again
+    # the legacy layout is gone: nothing reads it again; entries the
+    # migration does not own are left alone
     for root in (wm_root, rl_root):
-        assert all(n.endswith(".json") for n in os.listdir(root))
+        assert sorted(n for n in os.listdir(root) if not n.endswith(".json")) == ["keep", "notes.txt"]
 
     ws, rl = WatermarkStore(spark, wm_root), RunLog(spark, rl_root)
 
@@ -153,3 +159,36 @@ def test_legacy_parquet_control_roots_migrate_once(spark, tmp_path, jobs_of):
 
     assert jobs_of(cycle)[1] == []
     assert sorted(r["run_id"] for r in rl.table.read().collect()) == ["r1", "r2"]
+
+
+def test_control_plane_on_s3a_root_without_conditional_create(spark, tmp_path):
+    """The documents are written by tmp write + rename only, so the control
+    plane works on a store with no conditional create (s3a without the
+    capability or the conf assertion), as the ParquetTable tables did."""
+    ws = WatermarkStore(spark, str(tmp_path / "wm"))
+    rl = RunLog(spark, str(tmp_path / "runlog"))
+    for fs in (ws.table._fs, rl.table._fs):
+        fs._scheme = "s3a"  # emulate the resolved store (local FS underneath)
+        fs._cond_create = None
+    ws.upsert("p", "e", T_NEW, "r1")
+    assert ws.get("p", "e") == T_NEW
+    rl.start("r1", "pipe", "ent")
+    rl.finish_failed("r1", "boom")
+    rl.start("r1", "pipe", "ent")  # already logged: ON CONFLICT DO NOTHING
+    rl.finish_success("r1", rows_in=3, rows_inserted_history=2, rows_upserted_latest=1)
+    (r,) = rl.table.read().collect()
+    assert (r["status"], r["rows_in"], r["error"]) == ("success", 3, "boom")
+
+
+def test_corrupt_control_document_raises(spark, tmp_path):
+    """A document is only ever written whole, so one that is not a JSON
+    object is corruption: reading it raises instead of returning the
+    default watermark (which would re-extract everything)."""
+    ws = WatermarkStore(spark, str(tmp_path / "wm"))
+    ws.upsert("p", "e", T_NEW, "r1")
+    path = ws.table._path("p", "e")
+    for garbage in ("{\"pipeline_name\": ", "[]", ""):
+        with open(path.removeprefix("file:"), "w") as f:
+            f.write(garbage)
+        with pytest.raises(ValueError):
+            ws.get("p", "e")

@@ -636,38 +636,36 @@ class _RenameCrashes:
         return getattr(self._fs, name)
 
 
-#: Control writes of one cycle -> (TableFS call, root it writes under).
+#: Control writes of one cycle -> (root it writes under, earlier writes
+#: under that root in the same cycle).
 CONTROL_WRITES = {
-    "watermark.upsert": ("write_text_atomic", "/etl_watermark/"),
-    "runlog.start": ("create_exclusive", "/pipeline_run_log/"),
-    "runlog.finish_success": ("write_text_atomic", "/pipeline_run_log/"),
+    "watermark.upsert": ("/etl_watermark/", 0),
+    "runlog.start": ("/pipeline_run_log/", 0),
+    "runlog.finish_success": ("/pipeline_run_log/", 1),
 }
 
 
 def _crash_at_next(monkeypatch, point):
-    """Kill the next control write of ``point`` midway: a tmp-then-rename
-    write dies with its tmp file written and the rename not done; a
-    create-exclusive dies with the name claimed and no content in it."""
+    """Kill the control write of ``point`` midway: its tmp file is written
+    and the rename onto the document is not done."""
     from wms_data_pipeline_spark import fsio
 
-    method, under = CONTROL_WRITES[point]
-    real = getattr(fsio.TableFS, method)
-    armed = [True]
+    under, skip = CONTROL_WRITES[point]
+    real = fsio.TableFS.write_text_atomic
+    seen = [0]
 
     def crashing(self, path, text):
-        if not (armed[0] and under in path):
-            return real(self, path, text)
-        armed[0] = False
-        if method == "create_exclusive":
-            real(self, path, "")
-            raise _Crash(f"crashed inside the claim of {path}")
-        fs, self._fs = self._fs, _RenameCrashes(self._fs)
-        try:
-            return real(self, path, text)
-        finally:
-            self._fs = fs
+        if under in path:
+            seen[0] += 1
+            if seen[0] == skip + 1:
+                fs, self._fs = self._fs, _RenameCrashes(self._fs)
+                try:
+                    return real(self, path, text)
+                finally:
+                    self._fs = fs
+        return real(self, path, text)
 
-    monkeypatch.setattr(fsio.TableFS, method, crashing)
+    monkeypatch.setattr(fsio.TableFS, "write_text_atomic", crashing)
 
 
 @pytest.mark.parametrize("point", sorted(CONTROL_WRITES))

@@ -9,10 +9,9 @@ this module does the same through ``fsio.TableFS``:
 
 - one document per key, ``<root>/<escaped key>.json``, one JSON object;
 - ``put`` is tmp write + rename (``write_text_atomic``): a crash before the
-  rename leaves the previous document, and the stray ``.tmp`` is never read;
-- ``insert`` is ``create_exclusive``: losing it means the key exists. A
-  crash inside the claim can leave an empty document; it decodes as absent,
-  so the next writer of that key takes it over with ``put``;
+  rename leaves the previous document, and the stray ``.tmp`` is never read.
+  Documents are only ever written whole, so a document that is not one JSON
+  object is corruption and raises on read rather than reading as absent;
 - reads go through ``read_text_committed``, so a document caught inside
   the HDFS rename fallback serves its ``.old`` copy.
 
@@ -22,9 +21,13 @@ cycle path.
 
 LEGACY LAYOUT: a root written as a ``ParquetTable`` (``v=<n>/`` data plus a
 ``_VERSION`` pointer or ``_commits/`` markers) is migrated on the first
-touch of each ``DocTable``: one Spark read, one document per row, and only
-then are the legacy entries deleted, commit record before data. A crash
-in between re-runs the migration, which rewrites the same documents.
+touch of each ``DocTable``. Detecting it probes the legacy commit-record
+names only, a fixed number of ``exists`` calls per instance. Migrating is
+one Spark read and one document per row; only then are the legacy entries
+deleted, commit record before data, and nothing else under the root is
+touched. A crash before the commit record is gone re-runs the migration,
+which rewrites the same documents; a crash after it can leave ``v=<n>``
+data directories behind, which nothing reads.
 """
 
 from __future__ import annotations
@@ -38,14 +41,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType, TimestampType
 
 from wms_data_pipeline_spark import fsio
-from wms_data_pipeline_spark.operators.merge import ParquetTable
+from wms_data_pipeline_spark.operators.merge import ParquetTable, _dir_version
 
 _SUFFIX = ".json"
 _PLAIN = frozenset(string.ascii_letters + string.digits + "-_")
 _EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
-# legacy entries in deletion order; the v=<n> data dirs (and anything
-# else) go last
-_DELETE_RANK = {"_VERSION.tmp": 0, "_VERSION.old": 0, "_VERSION": 1, "_commits": 2}
+# a legacy root's commit-record entries, in deletion order: a pointer's
+# .tmp/.old before the pointer, so a crash never leaves a stale record
+_LEGACY = ("_VERSION.tmp", "_VERSION.old", "_VERSION", "_commits")
 
 
 def utc(ts: datetime) -> datetime:
@@ -61,11 +64,6 @@ def _escape(value: str) -> str:
         ch if ch in _PLAIN else "".join(f"~{b:02x}" for b in ch.encode("utf-8"))
         for ch in value
     )
-
-
-def _is_doc(name: str) -> bool:
-    """A document, or the tmp/old file of one (``write_text_atomic``)."""
-    return name.endswith((_SUFFIX, _SUFFIX + ".tmp", _SUFFIX + ".old"))
 
 
 class DocTable:
@@ -96,15 +94,14 @@ class DocTable:
         }
         return json.dumps(out, sort_keys=True)
 
-    def _decode(self, text: "str | None") -> "dict | None":
-        """The document, or None when absent or not a whole JSON object
-        (the empty claim of a crashed ``insert``)."""
-        try:
-            raw = json.loads(text) if text else None
-        except ValueError:
+    def _load(self, path: str) -> "dict | None":
+        """The document at ``path``, or None when there is none."""
+        text = self._fs.read_text_committed(path)
+        if text is None:
             return None
+        raw = json.loads(text)
         if not isinstance(raw, dict):
-            return None
+            raise ValueError(f"control document {path!r} is not a JSON object: {text[:80]!r}")
         doc = {c: raw.get(c) for c in self.schema.names}
         for c in self._ts:
             if doc[c] is not None:
@@ -114,17 +111,12 @@ class DocTable:
     # -- the cycle path: driver-side file I/O, no Spark job ------------------
     def get(self, *values: str) -> "dict | None":
         self._migrate()
-        return self._decode(self._fs.read_text_committed(self._path(*values)))
+        return self._load(self._path(*values))
 
     def put(self, doc: dict) -> None:
         """Write (or replace) the document of ``doc``'s key atomically."""
         self._migrate()
         self._fs.write_text_atomic(self._path_of(doc), self._encode(doc))
-
-    def insert(self, doc: dict) -> bool:
-        """Create the document iff its key has none; False when it exists."""
-        self._migrate()
-        return self._fs.create_exclusive(self._path_of(doc), self._encode(doc))
 
     # -- readers --------------------------------------------------------------
     def read(self) -> "DataFrame | None":
@@ -137,9 +129,7 @@ class DocTable:
             | {n[: -len(".old")] for n in names if n.endswith(_SUFFIX + ".old")}
         )
         docs = [
-            d
-            for n in bases
-            if (d := self._decode(self._fs.read_text_committed(fsio.join(self.root, n))))
+            d for n in bases if (d := self._load(fsio.join(self.root, n))) is not None
         ]
         if not docs:
             return None
@@ -148,11 +138,10 @@ class DocTable:
         )
 
     def _migrate(self) -> None:
-        """Move a legacy ParquetTable root onto documents (module docstring);
-        one listing per instance when there is nothing to migrate."""
+        """Move a legacy ParquetTable root onto documents (module docstring)."""
         if self._migrated:
             return
-        legacy = [n for n in self._fs.list_names(self.root) if not _is_doc(n)]
+        legacy = [n for n in _LEGACY if self._fs.exists(fsio.join(self.root, n))]
         if legacy:
             old = ParquetTable(self.spark, self.root).read()
             if old is not None:
@@ -166,8 +155,7 @@ class DocTable:
                         if doc[c] is not None:
                             doc[c] = _EPOCH + timedelta(microseconds=doc[c])
                     self._fs.write_text_atomic(self._path_of(doc), self._encode(doc))
-            # the commit record before the data, and its .old/.tmp before
-            # it, so a crash in here never leaves a stale record to re-read
-            for n in sorted(legacy, key=lambda n: _DELETE_RANK.get(n, 3)):
+            data = [n for n in self._fs.list_names(self.root) if _dir_version(n) is not None]
+            for n in legacy + data:
                 self._fs.delete(fsio.join(self.root, n))
         self._migrated = True

@@ -9,8 +9,9 @@ empty batches (staging run.py:54-86 falls through after the early success)
 is intentionally NOT reproduced — one terminal state per run.
 
 Each run is one driver-written JSON document (``control.docs.DocTable``),
-with no Spark job: ``start`` is a create-exclusive, and losing it is the
-ON CONFLICT DO NOTHING; ``finish_*`` overlays only the columns it sets and
+with no Spark job: ``start`` writes the document only when the run has
+none, which is the ON CONFLICT DO NOTHING under the single-writer
+discipline every table here assumes; ``finish_*`` overlays only the columns it sets and
 rewrites the document atomically, so an error text survives a
 failed-then-successful retry exactly as an UPDATE of the row would keep
 it. ``table.read()`` is the table view, one row per run.
@@ -55,11 +56,10 @@ class RunLog:
     def start(self, run_id: str, pipeline_name: str, entity: str) -> None:
         """INSERT … ON CONFLICT DO NOTHING — a restarted run keeps its
         original start row (reference pipeline_run_logs_repo.py:7-24)."""
-        doc = dict.fromkeys(RUNLOG_SCHEMA.names)
-        doc.update(run_id=run_id, pipeline_name=pipeline_name, entity=entity,
-                   started_at=_now(), status="running")
-        if not self.table.insert(doc) and self.table.get(run_id) is None:
-            # a start that crashed inside its claim left an empty document
+        if self.table.get(run_id) is None:
+            doc = dict.fromkeys(RUNLOG_SCHEMA.names)
+            doc.update(run_id=run_id, pipeline_name=pipeline_name, entity=entity,
+                       started_at=_now(), status="running")
             self.table.put(doc)
 
     def _finish(self, run_id: str, **updates) -> None:

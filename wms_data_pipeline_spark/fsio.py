@@ -62,8 +62,7 @@ primitive behind ``concurrent_writers=True`` commit markers:
   Hadoop conf. WITHOUT either signal the old check-then-put behavior
   cannot claim exclusively, so ``create_exclusive`` REFUSES s3-family
   roots loudly — single-writer-only, graduate to Delta/Iceberg (the
-  pre-r14 docstring caveat, now enforced in code). ``RunLog.start`` claims
-  its run document this way, so a run log on such a root refuses too.
+  pre-r14 docstring caveat, now enforced in code).
 
 Each call is one py4j round-trip (a few ms): fine for control-plane files,
 never used on the data path.
