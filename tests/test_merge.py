@@ -222,3 +222,239 @@ def test_concurrent_write_failing_on_pruned_snapshot_is_a_lost_race(spark, tmp_p
     data_dirs = [n for n in fsio.TableFS(spark, root).list_names(root) if n.startswith("v=")]
     assert data_dirs == [t._marker_dir(2)]
     assert t.read().collect()[0]["payload"] == "v2"
+
+
+# ------------------------------------------------ history as a segment log
+def _files(root):
+    """Every file under ``root`` (relative path -> bytes)."""
+    import os
+
+    out = {}
+    for dp, _dn, fn in os.walk(root):
+        for f in fn:
+            p = os.path.join(dp, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = fh.read()
+    return out
+
+
+def _keys(df):
+    return sorted((r["id"], r["updated_at"], r["payload_hash"]) for r in df.collect())
+
+
+def _batch(spark, tag, n=3, day=1):
+    return _rec(spark, [(f"{tag}{i}", datetime(2026, 1, day), tag, f"h{tag}{i}") for i in range(n)])
+
+
+def test_history_append_writes_only_the_new_rows(spark, tmp_path):
+    """A second append leaves the first version's files byte-identical and
+    writes a new dir holding exactly the inserted rows, which a manifest
+    joins to the first."""
+    root = tmp_path / "hist"
+    t = ParquetTable(spark, str(root))
+    assert t.append_history(_batch(spark, "a")) == 3
+    before = _files(root / "v=1")
+    assert t.append_history(_batch(spark, "a").unionByName(_batch(spark, "b", 2))) == 2
+    assert _files(root / "v=1") == before
+    assert spark.read.parquet(str(root / "v=2")).count() == 2
+    assert (root / "v=2" / "_manifest").read_text().split() == ["v=1", "v=2"]
+    assert _keys(t.read()) == _keys(_batch(spark, "a").unionByName(_batch(spark, "b", 2)))
+
+
+def test_zero_insert_append_leaves_the_root_unchanged(spark, tmp_path):
+    root = tmp_path / "hist"
+    t = ParquetTable(spark, str(root))
+    t.append_history(_batch(spark, "a"))
+    t.append_history(_batch(spark, "b"))
+    before = _files(root)
+    assert t.append_history(_batch(spark, "b")) == 0
+    assert _files(root) == before
+    assert t.current_version() == 2
+
+
+def test_noop_upsert_commits_no_version(spark, tmp_path):
+    """A redelivered-only upsert changes nothing, so it commits nothing: the
+    retained versions stay and the root is as it was."""
+    root = tmp_path / "latest"
+    t = ParquetTable(spark, str(root), keep_versions=2)
+    t.upsert_latest(_rec(spark, [("a", T1, "v1", "h1")]))
+    t.upsert_latest(_rec(spark, [("a", T2, "v2", "h2"), ("b", T1, "b", "hb")]))
+    before = _files(root)
+    assert t.upsert_latest(_rec(spark, [("a", T2, "v2", "h2")])) == 0
+    assert t.versions() == [1, 2] and t.current_version() == 2
+    assert _files(root) == before
+
+
+def test_segmented_time_travel_with_retention(spark, tmp_path):
+    t = ParquetTable(spark, str(tmp_path / "hist"), keep_versions=2)
+    for tag in "abc":
+        t.append_history(_batch(spark, tag))
+    assert t.versions() == [2, 3]
+    assert _keys(t.read(version=2)) == _keys(_batch(spark, "a").unionByName(_batch(spark, "b")))
+    assert t.read().count() == 9 and t.read(version=3).count() == 9
+    with pytest.raises(ValueError, match="was pruned"):
+        t.read(version=1)
+
+
+def test_retention_deletes_only_unreferenced_dirs(spark, tmp_path):
+    """Retention keeps every dir a retained version's manifest lists and
+    deletes the rest: a crashed loser's orphan, and the segments a fold
+    left behind."""
+    import os
+
+    root = tmp_path / "hist"
+    t = ParquetTable(spark, str(root))
+    t.append_history(_batch(spark, "a"))
+    _batch(spark, "zz").write.parquet(str(root / "v=1-deadbeef"))  # orphan
+    t.append_history(_batch(spark, "b"))
+    t.append_history(_batch(spark, "c"))
+    assert sorted(n for n in os.listdir(root) if n.startswith("v=")) == ["v=1", "v=2", "v=3"]
+    assert t.versions() == [3] and t.read().count() == 9
+    spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", "3")
+    try:
+        t.append_history(_batch(spark, "d"))  # 4 dirs > 3: folds
+    finally:
+        spark.conf.unset("spark.sql.sources.parallelPartitionDiscovery.threshold")
+    assert sorted(n for n in os.listdir(root) if n.startswith("v=")) == ["v=4"]
+    assert not (root / "v=4" / "_manifest").exists()
+    assert t.read().count() == 12
+
+
+def test_history_folds_past_the_discovery_threshold(spark, tmp_path):
+    """A manifest never lists more dirs than Spark lists without a job
+    (32 by default): the 33rd append folds the log into one full dir."""
+    import os
+
+    root = tmp_path / "hist"
+    t = ParquetTable(spark, str(root))
+    rows = [(f"k{i}", T1, "p", f"h{i}") for i in range(33)]
+    for row in rows[:32]:
+        assert t.append_history(_rec(spark, [row])) == 1
+    assert len((root / "v=32" / "_manifest").read_text().split()) == 32
+    assert t.append_history(_rec(spark, rows[32:] + rows[:1])) == 1
+    assert [n for n in os.listdir(root) if n.startswith("v=")] == ["v=33"]
+    assert not (root / "v=33" / "_manifest").exists()
+    assert _keys(t.read()) == _keys(_rec(spark, rows))
+
+
+class _CommitCrash(BaseException):
+    pass
+
+
+@pytest.mark.parametrize("concurrent", [False, True])
+def test_history_crash_before_commit_reruns_converge(spark, tmp_path, monkeypatch, concurrent):
+    """A process that dies between the segment write (manifest included)
+    and the commit record exposes nothing; the rerun commits the batch
+    once, and the orphan is swept when retention passes it."""
+    from wms_data_pipeline_spark import fsio
+
+    root = tmp_path / "hist"
+    t = ParquetTable(spark, str(root), concurrent_writers=concurrent)
+    t.append_history(_batch(spark, "a"))
+    commit = "create_exclusive" if concurrent else "write_text_atomic"
+    real = getattr(fsio.TableFS, commit)
+
+    def dies(self, path, text):
+        if path.endswith(("/_VERSION", "/_commits/2")):
+            raise _CommitCrash(path)
+        return real(self, path, text)
+
+    monkeypatch.setattr(fsio.TableFS, commit, dies)
+    with pytest.raises(_CommitCrash):
+        t.append_history(_batch(spark, "b"))
+    monkeypatch.setattr(fsio.TableFS, commit, real)
+    assert t.current_version() == 1 and t.read().count() == 3
+    assert t.append_history(_batch(spark, "b")) == 3
+    assert t.append_history(_batch(spark, "c")) == 3
+    assert t.append_history(_batch(spark, "b")) == 0
+    assert _keys(t.read()) == _keys(
+        _batch(spark, "a").unionByName(_batch(spark, "b")).unionByName(_batch(spark, "c"))
+    )
+    t.append_history(_batch(spark, "d"))
+    live = set(t._dirs(t.current_version()))
+    assert {n for n in fsio.TableFS(spark, str(root)).list_names(str(root)) if n.startswith("v=")} == live
+
+
+@pytest.mark.parametrize("layout", ["pointer", "markers", "buckets"])
+def test_parent_layout_tables_read_then_take_a_segment(spark, tmp_path, layout):
+    """Tables written before manifests existed read the same rows, and the
+    next append adds a segment on top of their full dir."""
+    from wms_data_pipeline_spark.operators.merge_partitioned import PartitionedMergeTable
+
+    root = tmp_path / "old"
+    base = _batch(spark, "a")
+    if layout == "buckets":
+        pt = PartitionedMergeTable(spark, str(root), n_buckets=2)
+        pt.upsert_latest(base)  # full-table publishes, one per bucket
+        assert _keys(pt.read_all()) == _keys(base)
+        assert pt.append_history(base.unionByName(_batch(spark, "b"))) == 3
+        assert _keys(pt.read_all()) == _keys(base.unionByName(_batch(spark, "b")))
+        manifests = list(root.glob("b=*/v=2/_manifest"))
+        assert manifests and all(m.read_text().split() == ["v=1", "v=2"] for m in manifests)
+        return
+    if layout == "pointer":
+        base.write.parquet(str(root / "v=3"))
+        (root / "_VERSION").write_text("3")
+        t = ParquetTable(spark, str(root))
+    else:
+        base.write.parquet(str(root / "v=3-0badf00d"))
+        (root / "_commits").mkdir()
+        (root / "_commits" / "3").write_text("v=3-0badf00d")
+        t = ParquetTable(spark, str(root), concurrent_writers=True)
+    assert _keys(t.read()) == _keys(base) and t.versions() == [3]
+    old = t._version_path(3).rsplit("/", 1)[1]
+    assert t.append_history(base.unionByName(_batch(spark, "b"))) == 3
+    dirs = t._dirs(4)
+    assert len(dirs) == 2 and dirs[0] == old
+    assert _keys(t.read()) == _keys(base.unionByName(_batch(spark, "b")))
+    assert t.versions() == [4]
+
+
+def test_append_history_is_one_write(spark, tmp_path, jobs_of):
+    """The inserted count is observed on the segment write: an append onto
+    an existing history runs the anti-join and the write once (at most 4
+    jobs, where a count-then-publish ran 8)."""
+    t = ParquetTable(spark, str(tmp_path / "hist"))
+    t.append_history(_rec(spark, [(f"k{i}", T1, "p", f"h{i}") for i in range(50)]))
+    batch = _rec(spark, [("k1", T1, "p", "h1"), ("new", T2, "q", "hn")])
+    n, jobs = jobs_of(lambda: t.append_history(batch))
+    assert n == 1 and len(jobs) <= 4
+
+
+@pytest.mark.parametrize("hook", ["read", "_version_path", "_seal"])
+def test_concurrent_history_append_loser_retries_on_top(spark, tmp_path, hook):
+    """The concurrent-writer interleavings on ``append_history``: the winner
+    appends right after the loser read its snapshot, resolved its path, or
+    wrote its segment. The loser gets ConcurrentPublishError, the winner's
+    prune has deleted none of the loser's snapshot files, and the retry
+    lands on top of the winner."""
+    import os
+
+    from wms_data_pipeline_spark.operators.merge import ConcurrentPublishError
+
+    root = str(tmp_path / "race")
+    winner = ParquetTable(spark, root, concurrent_writers=True)
+    winner.append_history(_batch(spark, "s"))
+    winner.append_history(_batch(spark, "t"))
+    loser = ParquetTable(spark, root, concurrent_writers=True)
+    snapshot = [f.split(":", 1)[1] for f in loser.read().inputFiles()]
+    real = getattr(loser, hook)
+    fired = []
+
+    def then_lose(*args, **kwargs):
+        out = real(*args, **kwargs)
+        if not fired:
+            fired.append(winner.append_history(_batch(spark, "w")))
+        return out
+
+    setattr(loser, hook, then_lose)
+    with pytest.raises(ConcurrentPublishError):
+        loser.append_history(_batch(spark, "l"))
+    delattr(loser, hook)
+    assert fired == [3] and all(os.path.exists(f) for f in snapshot)
+    assert loser.append_history(_batch(spark, "l")) == 3
+    assert _keys(loser.read()) == _keys(
+        _batch(spark, "s").unionByName(_batch(spark, "t"))
+        .unionByName(_batch(spark, "w")).unionByName(_batch(spark, "l"))
+    )
+    assert loser.current_version() == 4

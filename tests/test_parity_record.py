@@ -27,3 +27,30 @@ def test_parity_block_counts_per_scale(tmp_path):
     assert f"**{n - 1}/{n} pass**" in block
     assert f"- `/data/sf0.01`: {n - 3}/{n - 3} pass" in block
     assert "- `/data/sf0.1`: 2/3 pass" in block
+
+
+def test_parity_run_writes_tracked_files_only_with_record(tmp_path, monkeypatch):
+    """A verification run prints its verdicts and leaves every tracked
+    file as it was; ``--record`` writes the record."""
+    from types import SimpleNamespace
+
+    import tools.parity as parity
+
+    tracked = {"PARITY_LAST.json": "{}\n", "SCALE_NOTES.md": "# Scale notes\n", "COVERAGE.md": "# Coverage\n"}
+    for name, text in tracked.items():
+        (tmp_path / name).write_text(text)
+    spark = SimpleNamespace(sparkContext=SimpleNamespace(setLogLevel=lambda level: None), stop=lambda: None)
+    monkeypatch.setattr(parity, "REPO_ROOT", str(tmp_path))
+    monkeypatch.setattr(parity, "get_spark", lambda name: spark)
+    monkeypatch.setattr(parity, "make_duck", lambda sf_dir: None)
+    monkeypatch.setattr(parity, "check_query", lambda spark, con, name, sf_dir: None)
+    monkeypatch.delenv("PARITY_OUT", raising=False)
+    names = sorted(REGISTRY)[:2]
+
+    assert parity.main(["/data/sf0.01", *names]) == 0
+    assert {p.name: p.read_text() for p in tmp_path.iterdir()} == tracked
+
+    assert parity.main(["--record", "/data/sf0.01", *names]) == 0
+    state = json.loads((tmp_path / "PARITY_LAST.json").read_text())
+    assert {n: state["results"][n] for n in names} == dict.fromkeys(names, "pass")
+    assert "generated:parity" in (tmp_path / "SCALE_NOTES.md").read_text()

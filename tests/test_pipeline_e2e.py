@@ -738,3 +738,64 @@ def test_control_write_crash_reruns_converge(spark, tmp_path, monkeypatch, point
     assert wm0 < wm1 <= wm2 == top
     assert wm2 <= landed_max.replace(tzinfo=timezone.utc)
     assert runs() == {"seed": "success", "crashed": "success", "after": "success"}
+
+
+@pytest.mark.parametrize("point", sorted(CONTROL_WRITES))
+def test_crashed_cycle_then_new_run_id_stages_the_landed_batch(spark, tmp_path, monkeypatch, point):
+    """The rerun after a killed control write comes with a NEW run_id only
+    and no lookback. The landed batch the watermark already passed is
+    staged before the new extract: the warehouse matches the source, and
+    every run that staged is logged once, as success."""
+    from types import SimpleNamespace
+
+    import wms_data_pipeline_spark.pipeline as pl
+    from wms_data_pipeline_spark.control.runlog import RunLog
+    from wms_data_pipeline_spark.control.watermark import WatermarkStore
+
+    landing, control, wh = (str(tmp_path / d) for d in ("landing", "control", "wh"))
+    sim = CdcSimulator("ib_receipts", n_seed=6, seed=17)
+    run_id = ["seed"]
+    monkeypatch.setattr(pl, "uuid", SimpleNamespace(uuid4=lambda: SimpleNamespace(hex=run_id[0])))
+
+    def cycle(rid, status="success"):
+        run_id[0] = rid
+        (ex, st), = pl.orchestrated_run(
+            spark, "http://fake", landing, control, wh, entities=["ib_receipts"],
+            getter=MultiEntityApi({"ib_receipts": sim}), limit=10, lookback_seconds=0,
+        )
+        assert st.status == status
+        return ex
+
+    cycle("seed")
+    sim.tick(3)
+    _crash_at_next(monkeypatch, point)
+    with pytest.raises(_Crash):
+        cycle("crashed")
+    monkeypatch.undo()
+    monkeypatch.setattr(pl, "uuid", SimpleNamespace(uuid4=lambda: SimpleNamespace(hex=run_id[0])))
+    sim.tick(2)
+    if point == "runlog.start":
+        # a catch-up staging that fails holds the entity: nothing is
+        # extracted, and the watermark keeps naming the unstaged run
+        real = pl.staging_run
+        monkeypatch.setattr(pl, "staging_run", lambda *a, **k: pl.StagingResult(
+            "ib_receipts", a[4], 0, 0, 0, "failed", "injected"))
+        ex = cycle("blocked", status="failed")
+        assert (ex.run_id, ex.rows) == ("crashed", 0)
+        assert WatermarkStore(spark, f"{control}/etl_watermark").last_run_id(
+            "wms_extract", "ib_receipts") == "crashed"
+        monkeypatch.setattr(pl, "staging_run", real)
+    cycle("after")
+
+    latest = ParquetTable(spark, f"{wh}/stg_ib_receipts").read()
+    assert {r["id"]: r["status"] for r in latest.collect()} == {r["id"]: r["status"] for r in sim.rows}
+    hist = ParquetTable(spark, f"{wh}/stg_ib_receipts_history").read()
+    assert hist.count() == hist.dropDuplicates(["id", "updated_at", "payload_hash"]).count()
+    runs = {r["run_id"]: r["status"] for r in RunLog(spark, f"{wh}/pipeline_run_log").table.read().collect()}
+    # a killed watermark write leaves the watermark at "seed": the crashed
+    # extract never committed, "after" re-fetches the source's current rows
+    # and the crashed batch is never staged
+    staged = ["seed", "after"] if point == "watermark.upsert" else ["seed", "crashed", "after"]
+    if point != "watermark.upsert":
+        assert hist.count() == 6 + 3 + 2  # the crashed batch's versions too
+    assert runs == dict.fromkeys(staged, "success")

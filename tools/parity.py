@@ -2,7 +2,11 @@
 Spark and its oracle on DuckDB at a given sf dir; compare row count, sorted
 schema, and order-insensitive values.
 
-Usage: python tools/parity.py [sf_dir] [query ...]
+Usage: python tools/parity.py [--record] [sf_dir] [query ...]
+
+Only ``--record`` writes the tracked parity record (``PARITY_LAST.json`` and
+the generated blocks in ``SCALE_NOTES.md``/``COVERAGE.md``); without it a
+run prints its verdicts and changes no tracked file.
 """
 
 from __future__ import annotations
@@ -81,9 +85,12 @@ def check_query(spark, con, name: str, sf_dir: str) -> "str | None":
     return None
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    names = sys.argv[2:] or list(REGISTRY)
+def main(argv: "list[str] | None" = None) -> int:
+    args = sys.argv[1:] if argv is None else list(argv)
+    record = "--record" in args
+    args = [a for a in args if a != "--record"]
+    sf_dir = args[0] if args else "/root/testdata/sf0.01"
+    names = args[1:] or list(REGISTRY)
     spark = get_spark("parity")
     spark.sparkContext.setLogLevel("ERROR")
     con = make_duck(sf_dir)
@@ -100,7 +107,8 @@ def main() -> int:
             print(f"ok   {name}: rows match")
 
     print(f"\n{len(names) - len(failures)}/{len(names)} pass")
-    _record_results(names, failures, sf_dir)
+    if record:
+        _record_results(names, failures, sf_dir, root=REPO_ROOT)
     out = os.environ.get("PARITY_OUT")
     if out:
         # standalone per-run artifact (e.g. PARITY_SF01.json — the r14

@@ -55,6 +55,11 @@ class WatermarkStore:
             return doc["last_success_time"]
         return datetime.fromisoformat(default_time_start)
 
+    def last_run_id(self, pipeline_name: str, entity: str) -> "str | None":
+        """The run that last advanced (or carried forward) the watermark."""
+        doc = self.table.get(pipeline_name, entity)
+        return None if doc is None else doc["last_success_run_id"]
+
     def upsert(
         self,
         pipeline_name: str,

@@ -2,7 +2,9 @@
 
 ``ParquetTable`` keeps its commit record in a tiny ``_VERSION`` pointer
 file next to the data — the one pointer protocol of every parquet sink
-(``PartitionedMergeTable`` is a ParquetTable per bucket directory). The
+(``PartitionedMergeTable`` is a ParquetTable per bucket directory) — and a
+history version's ``_manifest`` (the segment dirs it spans) inside its
+version dir, written before the commit record. The
 watermark and run-log documents (``control.docs``) are small files of the
 same kind, so the control plane runs no Spark job at all. The DATA side
 (``spark.read/write.parquet``) was always scheme-agnostic, but the pointer

@@ -1,11 +1,12 @@
 """Bucket-partitioned merge table — the scale path for ops 19-20.
 
-``ParquetTable`` (merge.py) rewrites the whole table per merge: correct and
-cheap for latest-state/control tables, wrong for a 100 TB history. This
-sink partitions the table by a stable hash bucket of the business key
+``ParquetTable`` (merge.py) rewrites the whole latest-state table per
+upsert (its history appends already write only the inserted rows, as
+segment dirs), and its anti-join and upsert still read the whole table.
+This sink partitions the table by a stable hash bucket of the business key
 (``pmod(hash(id), n_buckets)`` → ``b=<k>`` directories) and makes each
-bucket directory a ``ParquetTable`` of its own (``v=<n>/`` + ``_VERSION``),
-so a merge:
+bucket directory a ``ParquetTable`` of its own (``v=<n>/`` + ``_VERSION``,
+segments listed in a version's ``_manifest``), so a merge:
 
 1. computes the bucket set present in the incoming batch (tiny agg);
 2. runs the bucket's ``ParquetTable`` merge on that bucket's slice of the
@@ -76,7 +77,7 @@ class PartitionedMergeTable:
             t = self.bucket(b)
             v = t.current_version()
             if v is not None:
-                paths.append(t._version_path(v))
+                paths.extend(t._paths(v))
         if not paths:
             return None
         return self.spark.read.parquet(*paths).drop(BUCKET_COL)

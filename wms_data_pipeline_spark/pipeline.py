@@ -38,7 +38,9 @@ from wms_data_pipeline_spark.operators.normalize import normalize
 from wms_data_pipeline_spark.operators.payload import with_payload_and_hash
 from wms_data_pipeline_spark.schemas import ENTITY_RAW_SCHEMAS
 from wms_data_pipeline_spark.sources.landing import (
+    is_unstaged,
     landing_path,
+    mark_staged,
     read_landing,
     write_landing,
 )
@@ -208,7 +210,8 @@ def staging_run(
 
     ``partitioned=True`` switches both sinks to the bucket-pruned
     PartitionedMergeTable — the layout for histories that dwarf each batch
-    (SCALE_NOTES.md)."""
+    (SCALE_NOTES.md). A batch it merged and logged gets a staged marker
+    (``landing.mark_staged``)."""
     runlog = RunLog(spark, f"{warehouse_root}/pipeline_run_log")
     runlog.start(run_id, pipeline_name, entity)
     try:
@@ -216,6 +219,7 @@ def staging_run(
         rows_in = df.count()
         if rows_in == 0:
             runlog.finish_success(run_id, 0, 0, 0)
+            mark_staged(landing_root, entity, run_id)
             return StagingResult(entity, run_id, 0, 0, 0, "success")
         staged = with_payload_and_hash(df)
         if partitioned:
@@ -235,6 +239,7 @@ def staging_run(
         n_hist = history.append_history(staged)
         n_latest = latest.upsert_latest(staged)
         runlog.finish_success(run_id, rows_in, n_hist, n_latest)
+        mark_staged(landing_root, entity, run_id)
         return StagingResult(entity, run_id, rows_in, n_hist, n_latest, "success")
     except Exception as e:  # noqa: BLE001 - reference catches everything too
         runlog.finish_failed(run_id, f"{type(e).__name__}: {e}")
@@ -271,7 +276,13 @@ def orchestrated_run(
     Rerun-safe end-to-end: landing writes are idempotent per (entity,
     run_id), the watermark only advances on success, and both merge sinks
     are conflict-deduped, so re-invoking after a crash (same or new run_id)
-    never duplicates warehouse rows.
+    never duplicates warehouse rows. A crash after the extract and before
+    staging finished leaves a landed batch that the watermark has already
+    passed, so before each entity's extract the batch of the run that last
+    moved its watermark is staged if it carries no staged marker — two
+    stats and one document read per entity, no listing. If that staging
+    fails, the entity extracts nothing this cycle (its watermark keeps
+    naming the unstaged run) and reports the failed StagingResult.
 
     ``task_retries`` adds the scheduler's failure semantics (reference:
     Airflow task retries, docker-compose.yaml:100-116): each per-entity
@@ -291,12 +302,33 @@ def orchestrated_run(
     run_id = uuid.uuid4().hex
     extracted_at = datetime.now(timezone.utc)
     wm_store = WatermarkStore(spark, f"{control_root}/etl_watermark")
+    pipeline_name = ex_kw.get("pipeline_name", "wms_extract")
+
+    def stage(entity: str, rid: str) -> StagingResult:
+        return retry_task(
+            lambda: staging_run(
+                spark, landing_root, warehouse_root, entity, rid, partitioned=partitioned
+            ),
+            retries=task_retries,
+            backoff_seconds=retry_backoff_seconds,
+            sleep=sleep,
+            is_failure=lambda st: st.status == "failed",
+        )
+
     out: list[tuple[ExtractResult, StagingResult | None]] = []
     for entity in entities:
+        prev = wm_store.last_run_id(pipeline_name, entity)
+        if prev not in (None, run_id) and is_unstaged(landing_root, entity, prev):
+            st = stage(entity, prev)
+            if st.status == "failed":
+                saved = wm_store.get(pipeline_name, entity)
+                out.append((ExtractResult(
+                    entity, prev, 0, landing_path(landing_root, entity, prev), saved
+                ), st))
+                continue
         ex = retry_task(
             lambda: _extract_entity(
-                spark, base_url, entity, landing_root, wm_store,
-                ex_kw.get("pipeline_name", "wms_extract"),
+                spark, base_url, entity, landing_root, wm_store, pipeline_name,
                 ex_kw.get("lookback_seconds", DEFAULT_LOOKBACK_SECONDS),
                 ex_kw.get("limit", 500), ex_kw.get("getter"),
                 ex_kw.get("output_format", "parquet"), run_id, extracted_at,
@@ -308,21 +340,7 @@ def orchestrated_run(
         if ex.landing_path is None:
             out.append((ex, None))
             continue
-        st = retry_task(
-            lambda: staging_run(
-                spark,
-                landing_root,
-                warehouse_root,
-                ex.entity,
-                ex.run_id,
-                partitioned=partitioned,
-            ),
-            retries=task_retries,
-            backoff_seconds=retry_backoff_seconds,
-            sleep=sleep,
-            is_failure=lambda st: st.status == "failed",
-        )
-        out.append((ex, st))
+        out.append((ex, stage(ex.entity, ex.run_id)))
     return out
 
 

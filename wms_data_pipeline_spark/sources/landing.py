@@ -29,8 +29,24 @@ CONTRACT_COLS = ("id", "updated_at", "_run_id", "_extracted_at")
 CSV_TIME_COLS = ("updated_at", "_extracted_at", "_watermark_effective")
 
 
+#: Written into a landed batch's dir once staging merged and logged it;
+#: Spark's readers skip ``_`` names.
+STAGED_MARKER = "_STAGED"
+
+
 def landing_path(landing_root: str, entity: str, run_id: str) -> str:
     return os.path.join(landing_root, entity, f"run_id={run_id}")
+
+
+def mark_staged(landing_root: str, entity: str, run_id: str) -> None:
+    open(os.path.join(landing_path(landing_root, entity, run_id), STAGED_MARKER), "w").close()
+
+
+def is_unstaged(landing_root: str, entity: str, run_id: str) -> bool:
+    """A batch of (entity, run_id) landed and staging never finished it:
+    two stats, no listing."""
+    path = landing_path(landing_root, entity, run_id)
+    return os.path.isdir(path) and not os.path.exists(os.path.join(path, STAGED_MARKER))
 
 
 def write_landing(
